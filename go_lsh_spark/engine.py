@@ -2,13 +2,15 @@
 
 SparkLSH is the DataFrame analogue of the reference's LSH struct
 (/root/reference/lsh/lsh.go:28-32): config + plane set + two tables
-(buckets, forward index) instead of in-memory maps. All methods are lazy
-DataFrame transformations; nothing collects.
+(buckets, forward index) instead of in-memory maps. index / delete /
+search_df build lazy DataFrames (search_df runs one small min/max collect
+over the queries when max_lag >= 0); search, exists, size, uids and stats
+run Spark actions and return driver-side values.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from go_lsh_spark.config import LSHConfig, SearchOptions
@@ -60,27 +62,29 @@ class SparkLSH:
         """Single-query convenience mirroring LSH.Search -> (scores, num_scored).
 
         Validates query length driver-side before launching any job,
-        mirroring ErrInvalidDocument (lsh/lsh.go:107-110)."""
+        mirroring ErrInvalidDocument (lsh/lsh.go:107-110). The query is
+        hashed on the driver (operators.search.search_vector), so the whole
+        search is one Spark action."""
         if len(vector) != self.cfg.vector_length:
             from go_lsh_spark.oracle import InvalidDocument
 
             raise InvalidDocument(
                 "vector length does not match with the configured options"
             )
-        q = self.spark.createDataFrame(
-            [(0, int(index), [float(x) for x in vector])],
-            "query_id long, index long, vector array<double>",
-        )
         opts = (opts or SearchOptions()).validate()
-        # the literal row-range prefilter (the reference's row enumeration,
-        # tables/tables.go:113-122, as static partition pruning) now lives in
-        # operators.search.search for single- AND multi-query batches alike
-        res = S.search(q, self.buckets, self.forward, self.cfg, self.planes, opts)
-        rows = res.scores.orderBy("rank").collect()
-        num_scored = res.candidates.count()
+        if self.buckets is None:
+            return [], 0  # nothing indexed: OracleLSH / empty reference tables
+        num_scored = Observation()
+        res = S.search_vector(
+            self.spark, vector, index, self.buckets, self.forward, self.cfg,
+            self.planes, opts, num_scored,
+        )
+        # one action: <= K rows plus the observed NumScored; the rank order
+        # is applied here, not by a global sort
+        rows = sorted(res.scores.collect(), key=lambda r: r["rank"])
         return (
             [(r["uid"], r["index"], r["score"]) for r in rows],
-            num_scored,
+            num_scored.get["num_scored"],
         )
 
     def exists(self, uid: int) -> bool:

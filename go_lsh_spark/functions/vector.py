@@ -29,7 +29,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-from go_lsh_spark.hyperplanes import PlaneSet
+from go_lsh_spark.hyperplanes import PlaneSet, hash16_tables
 
 SNAP_EPS = 1e-9
 
@@ -231,26 +231,18 @@ def make_hash_tables_udf(planes: PlaneSet, normalize: bool = True):
 
     The plane tensor rides inside the closure (Spark pickles it once per
     task -- for T=128,H=8,V=60 that's ~500KB, broadcast-sized). Each batch is
-    one (N, V) @ (V, T*H) matmul, mirroring the reference's per-table Hash16
-    loop (tables/tables.go:72) in a single BLAS call.
+    one hyperplanes.hash16_tables call: a single (N, V) @ (V, T*H) matmul,
+    mirroring the reference's per-table Hash16 loop (tables/tables.go:72).
     """
     stacked = planes.stacked  # capture ndarray, not the PlaneSet object
     cfg = planes.cfg
     t, h, v = cfg.num_tables, cfg.num_hyperplanes, cfg.vector_length
-    weights = (1 << np.arange(15, 15 - h, -1, dtype=np.uint64))
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def hash_tables(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in it:
-            m = _as_matrix(s, v)
-            if normalize:
-                norms = np.linalg.norm(m, axis=1, keepdims=True)
-                np.divide(m, norms, out=m, where=norms != 0)
-            bits = (m @ stacked.T) > 0.0
-            hashes = (
-                bits.reshape(m.shape[0], t, h).astype(np.uint64) * weights
-            ).sum(axis=2).astype(np.int64)
-            yield pd.Series(list(hashes))
+            hashes = hash16_tables(stacked, t, h, _as_matrix(s, v), normalize)
+            yield pd.Series(list(hashes.astype(np.int64)))
 
     return hash_tables
 

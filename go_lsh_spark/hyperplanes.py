@@ -87,6 +87,31 @@ class Hyperplanes:
         return int(self.hash_width(v, 64)[0])
 
 
+def hash16_tables(
+    stacked: np.ndarray, num_tables: int, num_hyperplanes: int, vectors,
+    normalize: bool = False,
+) -> np.ndarray:
+    """The Hash16 kernel: (N, V) vectors -> (N, T) uint64 per-table bucket
+    hashes. normalize=True applies TFunc v / ||v||2 to each row first
+    (configs/lshconfigs.go:26-29); zero rows pass through unchanged.
+
+    One matmul against the stacked (T*H, V) plane matrix, then per-table
+    MSB-first packing at width 16 (tables/tables.go:72 uses Hash16). The
+    index/search pandas UDF, the driver-side single-query path and the numpy
+    oracle all call this function, so their hashes agree bit for bit.
+    """
+    m = np.atleast_2d(np.asarray(vectors, dtype=np.float64))
+    if normalize:
+        norms = np.linalg.norm(m, axis=1, keepdims=True)
+        m = m / np.where(norms != 0, norms, 1.0)
+    bits = (m @ stacked.T) > 0.0  # (N, T*H)
+    bits = bits.reshape(m.shape[0], num_tables, num_hyperplanes)
+    weights = np.left_shift(
+        np.uint64(1), np.arange(15, 15 - num_hyperplanes, -1, dtype=np.uint64)
+    )
+    return (bits.astype(np.uint64) * weights).sum(axis=2, dtype=np.uint64)
+
+
 class PlaneSet:
     """All plane matrices for an LSHConfig, as one (T, H, V) tensor.
 
@@ -109,21 +134,13 @@ class PlaneSet:
         # (T*H, V) for a single matmul in the hashing hot path
         self.stacked = np.ascontiguousarray(self.tensor.reshape(t * h, v))
 
-    def hash_tables(self, vectors: np.ndarray) -> np.ndarray:
+    def hash_tables(self, vectors: np.ndarray, normalize: bool = False) -> np.ndarray:
         """Per-table uint16 bucket hashes for a batch: (N, V) -> (N, T) uint64.
-
-        One matmul against the stacked (T*H, V) matrix, then per-table
-        MSB-first packing at width 16 (tables/tables.go:72 uses Hash16).
-        """
+        See hash16_tables."""
         cfg = self.cfg
-        vectors = np.atleast_2d(np.asarray(vectors, dtype=np.float64))
-        bits = (vectors @ self.stacked.T) > 0.0  # (N, T*H)
-        bits = bits.reshape(vectors.shape[0], cfg.num_tables, cfg.num_hyperplanes)
-        weights = np.left_shift(
-            np.uint64(1),
-            np.arange(15, 15 - cfg.num_hyperplanes, -1, dtype=np.uint64),
+        return hash16_tables(
+            self.stacked, cfg.num_tables, cfg.num_hyperplanes, vectors, normalize
         )
-        return (bits.astype(np.uint64) * weights).sum(axis=2, dtype=np.uint64)
 
     def signature64(self, vectors: np.ndarray) -> np.ndarray:
         """Banded 64-bit signature: (N, V) -> (N,) int64 (bit i = plane i,

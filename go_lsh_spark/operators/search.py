@@ -15,21 +15,23 @@ Spark shape:
     buckets is partitioned by row_index
   * mutex-merged candidate union => dropDuplicates
   * negation trick (lsh/lsh.go:163-166) => second hash column from -v,
-    computed in the same UDF pass
+    computed in the same UDF pass (or the same driver matmul)
   * bounded heap => window row_number (per-query) / ORDER BY..LIMIT (global,
     Catalyst rewrites to TakeOrderedAndProject)
 
 Scale notes: the bucket join shuffles on (table_id, hash) -- hot hashes are
 handled by AQE skew-join (enabled in session.py); the scoring join on uid
-broadcasts the candidate side when queries are few. No Python in the plan
-except the two hash-UDF projections and none of it is per-row.
+broadcasts the candidate side when queries are few. Python in the plan:
+only search's hash-UDF projections (Arrow-batched, not per-row);
+search_vector hashes its one query on the driver, so its plan has none.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -44,6 +46,7 @@ from go_lsh_spark.config import (
 from go_lsh_spark.functions import vector as V
 from go_lsh_spark.hyperplanes import PlaneSet
 from go_lsh_spark.operators.index import lag_bounds
+from go_lsh_spark.oracle import go_div
 
 
 @dataclass
@@ -120,6 +123,10 @@ def candidate_join(
             b.row_index.between(start_row, end_row)
             & b.index.between(start_idx, end_idx)
         )
+    else:
+        # AllLags keeps [0, MaxInt64]: the reference's startIdx stays at its
+        # zero value (tables/tables.go:109-127), so negative indexes never match
+        joined = joined.filter(b.index >= 0)
     return joined.select(
         "query_id", "query_index", b.uid.alias("uid"), b.index.alias("index")
     ).dropDuplicates(["query_id", "uid", "index"])
@@ -188,6 +195,14 @@ def top_k(passed: DataFrame, k: int) -> DataFrame:
     )
 
 
+def lag_row_bounds(lo: int, hi: int, max_lag: int, row_size: int) -> tuple[int, int]:
+    """Literal [start_row, end_row] covering every query index in [lo, hi]
+    at max_lag (tables/tables.go:113-122, Go truncating division)."""
+    start_row = go_div(lo - max_lag, row_size) * row_size
+    end_row = go_div(hi + max_lag, row_size) * row_size
+    return start_row, end_row
+
+
 def search(
     queries: DataFrame,
     buckets: DataFrame,
@@ -196,29 +211,112 @@ def search(
     planes: PlaneSet,
     opts: SearchOptions | None = None,
 ) -> SearchResult:
-    """O14: the composite pipeline (lsh/lsh.go:106-129).
+    """O14 for a batch of queries (lsh/lsh.go:106-129): queries are
+    (query_id, index, vector), hashed by the Arrow UDF; buckets/forward
+    from operators.index.
 
-    queries: (query_id, index, vector); buckets/forward from operators.index.
+    With max_lag >= 0 one eager min/max(index) pass over the (small,
+    driver-submitted) queries yields a literal row range for the whole
+    batch, so the bucket scan prunes row partitions instead of applying the
+    lag bound only post-join (r2 verdict #3). The exact per-query lag
+    refinement still applies in candidate_join.
     """
     opts = (opts or SearchOptions()).validate()
+    row_bounds = None
     if opts.max_lag > ALL_LAGS:
-        # global row-range prefilter for the whole query batch: queries are
-        # small (driver-submitted), so min/max(index) is a cheap scalar pass,
-        # and the literal BETWEEN it produces reaches the bucket scan as a
-        # partition / parquet filter -- without it a batch of queries scans
-        # every row partition and the lag bound only applies post-join
-        # (engine.search's single-query pruning, generalized; r2 verdict #3).
-        # The exact per-query lag refinement still applies in candidate_join.
-        from go_lsh_spark.oracle import go_div  # noqa: PLC0415
-
         row = queries.agg(F.min("index").alias("lo"), F.max("index").alias("hi")).collect()[0]
         if row["lo"] is not None:
-            rs = cfg.row_size
-            start_row = go_div(int(row["lo"]) - opts.max_lag, rs) * rs
-            end_row = go_div(int(row["hi"]) + opts.max_lag, rs) * rs
-            buckets = buckets.filter(F.col("row_index").between(start_row, end_row))
+            row_bounds = lag_row_bounds(int(row["lo"]), int(row["hi"]), opts.max_lag, cfg.row_size)
     qh = hash_queries(queries, cfg, planes, opts)
-    cands = candidate_join(qh, buckets, cfg, opts)
+    return search_hashed(queries, qh, buckets, forward, cfg, opts, row_bounds)
+
+
+def search_vector(
+    spark: SparkSession,
+    vector,
+    index: int,
+    buckets: DataFrame,
+    forward: DataFrame,
+    cfg: LSHConfig,
+    planes: PlaneSet,
+    opts: SearchOptions | None = None,
+    num_scored: Observation | None = None,
+) -> SearchResult:
+    """O14 for one query vector (query_id 0) as a single Python-free plan.
+
+    The driver already holds the vector and the planes, so it hashes the
+    query with the UDF's own kernel (hyperplanes.hash16_tables) and ships
+    the T (2T for ANY) hashes and the vector as literal local relations; the
+    row range comes from `index` directly. A one-row Arrow UDF would be
+    almost all worker round-trip, and the min/max pass would be a job of its
+    own. `num_scored`, if given, observes the scored-candidate count in the
+    same action that collects the scores.
+    """
+    opts = (opts or SearchOptions()).validate()
+    index = int(index)
+    vec = np.asarray(vector, dtype=np.float64)
+    signs = []
+    if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_POS):
+        signs.append(vec)
+    if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_NEG):
+        signs.append(-vec)
+    hashes = planes.hash_tables(np.stack(signs), normalize=cfg.normalize)
+    # same (table_id, hash) from both branches would double-count candidates
+    distinct = sorted({(t, int(h)) for row in hashes for t, h in enumerate(row)})
+    qh = _local_relation(
+        spark,
+        [(0, index, t, h) for t, h in distinct],
+        "query_id long, index long, table_id int, hash int",
+    )
+    queries = _local_relation(
+        spark, [(0, index, vec.tolist())], "query_id long, index long, vector array<double>"
+    )
+    row_bounds = None
+    if opts.max_lag > ALL_LAGS:
+        row_bounds = lag_row_bounds(index, index, opts.max_lag, cfg.row_size)
+    return search_hashed(queries, qh, buckets, forward, cfg, opts, row_bounds, num_scored)
+
+
+def _local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Rows as a SQL VALUES table: a LocalRelation with exact size
+    statistics, so joins broadcast it without running a job to collect it
+    (createDataFrame would make an RDD scan). Values travel as named
+    parameters; positional `?` markers inside VALUES bind out of order on
+    Spark 4.1."""
+    names, types = zip(*(c.split() for c in schema.split(",")))
+    width = len(names)
+    tuples = ", ".join(
+        "(" + ", ".join(f":p{i * width + j}" for j in range(width)) + ")"
+        for i in range(len(rows))
+    )
+    values = spark.sql(
+        f"SELECT * FROM VALUES {tuples} AS t({', '.join(names)})",
+        args={f"p{k}": v for k, v in enumerate(v for r in rows for v in r)},
+    )
+    return values.select([F.col(n).cast(t) for n, t in zip(names, types)])
+
+
+def search_hashed(
+    queries: DataFrame,
+    query_hashes: DataFrame,
+    buckets: DataFrame,
+    forward: DataFrame,
+    cfg: LSHConfig,
+    opts: SearchOptions,
+    row_bounds: tuple[int, int] | None = None,
+    num_scored: Observation | None = None,
+) -> SearchResult:
+    """The shared O8-O13 body: bucket lookup for hashed queries
+    (query_id, index, table_id, hash), scoring against `queries`' vectors,
+    threshold and top-K. `row_bounds` is a literal row_index range applied
+    to the bucket scan (partition pruning); `num_scored` observes the
+    scored-candidate count (NumScored) on whatever action runs the scores.
+    """
+    if row_bounds is not None:
+        buckets = buckets.filter(F.col("row_index").between(*row_bounds))
+    cands = candidate_join(query_hashes, buckets, cfg, opts)
     scored = score_candidates(cands, queries, forward, cfg)
+    if num_scored is not None:
+        scored = scored.observe(num_scored, F.count(F.lit(1)).alias("num_scored"))
     passed = threshold_filter(scored, opts)
     return SearchResult(scores=top_k(passed, opts.num_to_return), candidates=scored)

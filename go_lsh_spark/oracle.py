@@ -118,8 +118,7 @@ class OracleLSH:
             raise InvalidDocument
         if np.std(vec, ddof=1) == 0:  # gonum StdDev is the sample stddev
             raise NoVectorComplexity
-        hashed = _l2_normalize(vec) if self.cfg.normalize else vec
-        hashes = self.planes.hash_tables(hashed[None, :])[0]  # (T,)
+        hashes = self.planes.hash_tables(vec, normalize=self.cfg.normalize)[0]  # (T,)
         row_index = go_div(index, self.cfg.row_size) * self.cfg.row_size
         for t in range(self.cfg.num_tables):
             h = int(hashes[t])
@@ -185,11 +184,14 @@ class OracleLSH:
         q = _l2_normalize(vec) if self.cfg.normalize else vec
         opts = (opts or SearchOptions()).validate()
 
+        pos_hashes, neg_hashes = self.planes.hash_tables(
+            np.stack([vec, -vec]), normalize=self.cfg.normalize
+        )
         cands: dict[int, set[int]] = {}
         if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_POS):
-            self._merge(cands, self._filter_by_lag(q, index, opts.max_lag))
+            self._merge(cands, self._filter_by_lag(pos_hashes, index, opts.max_lag))
         if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_NEG):
-            self._merge(cands, self._filter_by_lag(-q, index, opts.max_lag))
+            self._merge(cands, self._filter_by_lag(neg_hashes, index, opts.max_lag))
 
         num_scored = 0
         passed: list[Score] = []
@@ -216,9 +218,9 @@ class OracleLSH:
         for uid, idxs in frm.items():
             into.setdefault(uid, set()).update(idxs)
 
-    def _filter_by_lag(self, q: np.ndarray, index: int, max_lag: int) -> dict[int, set[int]]:
-        """tables/tables.go:103-155 across all tables (lsh/lsh.go:182-209)."""
-        hashes = self.planes.hash_tables(q[None, :])[0]
+    def _filter_by_lag(self, hashes: np.ndarray, index: int, max_lag: int) -> dict[int, set[int]]:
+        """tables/tables.go:103-155 across all tables (lsh/lsh.go:182-209),
+        for one query's (T,) per-table hashes."""
         out: dict[int, set[int]] = {}
         start_idx, end_idx = 0, np.iinfo(np.int64).max
         if max_lag > ALL_LAGS:
@@ -299,11 +301,7 @@ def lsh_candidate_pairs_oracle(
     v = np.asarray(vectors, dtype=np.float64)
     if center:
         v = v - v.mean(axis=1, keepdims=True)
-    if cfg.normalize:
-        norms = np.linalg.norm(v, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        v = v / norms
-    hashes = planes.hash_tables(v)  # (N, T)
+    hashes = planes.hash_tables(v, normalize=cfg.normalize)  # (N, T)
     pairs: set[tuple[int, int]] = set()
     for t in range(cfg.num_tables):
         buckets: dict[int, list[int]] = {}

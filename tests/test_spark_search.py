@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from go_lsh_spark.config import (
+    ALL_LAGS,
     SIGN_FILTER_ANY,
     SIGN_FILTER_NEG,
     SIGN_FILTER_POS,
@@ -120,29 +121,132 @@ def test_validation_side_output(spark):
     assert eng.forward.count() == 1
 
 
-@pytest.mark.slow
-def test_engine_matches_oracle_randomized(spark):
-    """Engine and oracle share planes => identical result sets (SURVEY §5b)."""
+# Randomized corpus for the engine-vs-oracle and single-vs-batch checks:
+# random docs spread over three row partitions plus, for each of the first
+# TIE_BASES vectors, two exact copies and two negated copies at every query
+# index -- exact |score| ties across uids and indexes, so the tie order of
+# top-K (results/results.go:82-101) is exercised, and every sign filter has
+# at least two passing rows at any index and lag.
+QUERY_INDEXES = (0, 7200, -60)
+TIE_BASES = 6
+RANDOM_CFG = dict(num_hyperplanes=4, num_tables=16, vector_length=8, seed=99)
+
+
+@pytest.fixture(scope="module")
+def random_corpus(spark):
     rng = np.random.default_rng(123)
-    n, vlen = 200, 8
+    n, vlen = 160, RANDOM_CFG["vector_length"]
     vecs = rng.normal(size=(n, vlen))
-    cfg_kwargs = dict(num_hyperplanes=8, num_tables=16, vector_length=vlen, seed=99)
-    docs = [(i, 0, [float(x) for x in vecs[i]]) for i in range(n)]
+    doc_indexes = (-7260, -60, 0, 840, 7200, 7800, 8100, 14400)
+    docs = [(i, doc_indexes[i % len(doc_indexes)], vecs[i]) for i in range(n)]
+    uid = 1000
+    for j in range(TIE_BASES):
+        for idx in QUERY_INDEXES:
+            for sign in (1.0, 1.0, -1.0, -1.0):
+                docs.append((uid, idx, sign * vecs[j]))
+                uid += 1
+    docs = [(u, i, [float(x) for x in v]) for u, i, v in docs]
 
-    eng = make_engine(spark, docs, **cfg_kwargs)
-    oracle = OracleLSH(LSHConfig(**cfg_kwargs))
-    for uid, idx, vec in docs:
-        oracle.index(uid, idx, vec)
+    eng = make_engine(spark, docs, **RANDOM_CFG)
+    oracle = OracleLSH(LSHConfig(**RANDOM_CFG))
+    for u, idx, vec in docs:
+        oracle.index(u, idx, vec)
+    return eng, oracle, vecs
 
-    for qi in range(5):
-        q = vecs[rng.integers(0, n)] + rng.normal(scale=0.05, size=vlen)
-        so = SearchOptions(num_to_return=20, threshold=0.6, sign_filter=SIGN_FILTER_ANY)
-        got, got_scored = eng.search(q, 0, so)
-        exp, exp_scored = oracle.search(q, 0, so)
-        assert got_scored == exp_scored, f"query {qi}: NumScored mismatch"
-        got_set = {(u, i, round(s, 9)) for u, i, s in got}
-        exp_set = {(s.uid, s.index, round(s.score, 9)) for s in exp}
-        assert got_set == exp_set, f"query {qi}"
+
+def scored_list(scores):
+    return [(u, i, round(s, 9)) for u, i, s in scores]
+
+
+@pytest.mark.slow
+def test_engine_matches_oracle_randomized(random_corpus):
+    """Engine and oracle share planes => identical ordered top-K (ties
+    included) and NumScored for every sign filter x lag x query index, with
+    num_to_return below the pass count (SURVEY §5b)."""
+    eng, oracle, vecs = random_corpus
+    rng = np.random.default_rng(7)
+    vlen = vecs.shape[1]
+    combos = [
+        (sign, lag, idx)
+        for sign in (SIGN_FILTER_POS, SIGN_FILTER_NEG, SIGN_FILTER_ANY)
+        for lag in (ALL_LAGS, 0, 900)
+        for idx in QUERY_INDEXES
+    ]
+    for qi, (sign, lag, idx) in enumerate(combos):
+        q = vecs[qi % TIE_BASES] + rng.normal(scale=0.05, size=vlen)
+        full, _ = oracle.search(
+            q, idx, SearchOptions(num_to_return=10**6, threshold=0.3, sign_filter=sign, max_lag=lag)
+        )
+        k = len(full) // 2
+        assert k >= 1, f"combo {qi}: degenerate fixture, {len(full)} passing"
+        so = SearchOptions(num_to_return=k, threshold=0.3, sign_filter=sign, max_lag=lag)
+        got, got_scored = eng.search(q, idx, so)
+        exp, exp_scored = oracle.search(q, idx, so)
+        assert got_scored == exp_scored, f"combo {qi} {sign, lag, idx}: NumScored"
+        assert scored_list(got) == [(s.uid, s.index, round(s.score, 9)) for s in exp], (
+            f"combo {qi} {sign, lag, idx}"
+        )
+
+
+def test_single_search_matches_search_df(random_corpus):
+    """The driver-hashed single-query path equals the Arrow-UDF batch path
+    row for row in rank order, NumScored included."""
+    eng, _, vecs = random_corpus
+    rng = np.random.default_rng(11)
+    for qi, (sign, lag, idx) in enumerate(
+        [(SIGN_FILTER_POS, 900, 0), (SIGN_FILTER_NEG, ALL_LAGS, 7200), (SIGN_FILTER_ANY, 0, -60)]
+    ):
+        q = vecs[qi] + rng.normal(scale=0.05, size=vecs.shape[1])
+        so = SearchOptions(num_to_return=5, threshold=0.3, sign_filter=sign, max_lag=lag)
+        single, single_scored = eng.search(q, idx, so)
+        res = eng.search_df(
+            eng.spark.createDataFrame(
+                [(0, idx, [float(x) for x in q])], "query_id long, index long, vector array<double>"
+            ),
+            so,
+        )
+        batch = [
+            (r["uid"], r["index"], r["score"])
+            for r in res.scores.orderBy("rank").collect()
+        ]
+        assert single and single == batch, f"query {qi}"
+        assert single_scored == res.num_scored()[0], f"query {qi}"
+
+
+def test_search_empty_engine_matches_oracle(spark):
+    """Searching before index(): no tables, so no hits and nothing scored --
+    OracleLSH (and the reference on empty tables) return ([], 0)."""
+    cfg = LSHConfig()
+    oracle_scores, oracle_scored = OracleLSH(cfg).search([0, 0, 0.1], 0)
+    assert (oracle_scores, oracle_scored) == ([], 0)
+    assert SparkLSH(spark, cfg).search([0, 0, 0.1], 0) == (oracle_scores, oracle_scored)
+    assert SparkLSH(spark, cfg).search(
+        [0, 0, 0.1], 0, SearchOptions(sign_filter=SIGN_FILTER_ANY, max_lag=ALL_LAGS)
+    ) == ([], 0)
+
+
+def test_hash_udf_bit_equal_to_planeset(spark):
+    """The index/search Arrow UDF and the driver/oracle kernel are one
+    Hash16 function: bit-equal on random, negated and zero-norm vectors,
+    with and without normalization."""
+    from pyspark.sql import functions as F
+
+    from go_lsh_spark.functions.vector import make_hash_tables_udf
+    from go_lsh_spark.hyperplanes import PlaneSet
+
+    cfg = LSHConfig(num_hyperplanes=8, num_tables=12, vector_length=7, seed=5)
+    planes = PlaneSet(cfg)
+    rng = np.random.default_rng(8)
+    rand = rng.normal(size=(40, 7)) * rng.uniform(1e-3, 1e3, size=(40, 1))
+    vecs = np.vstack([rand, -rand, np.zeros((2, 7))])
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], "id long, vector array<double>"
+    )
+    for normalize in (True, False):
+        udf = make_hash_tables_udf(planes, normalize=normalize)
+        rows = df.select("id", udf(F.col("vector")).alias("h")).orderBy("id").collect()
+        got = np.array([r["h"] for r in rows], dtype=np.uint64)
+        np.testing.assert_array_equal(got, planes.hash_tables(vecs, normalize=normalize))
 
 
 def test_num_scored_counts_all_candidates(spark):

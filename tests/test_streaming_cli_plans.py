@@ -148,6 +148,38 @@ def test_multi_query_search_prunes_bucket_partitions(spark, tmp_path):
     assert "row_index" in plan.split("PartitionFilters")[1][:200]
 
 
+def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
+    """SparkLSH.search's plan (operators.search.search_vector) over
+    partitioned stored buckets: the literal row range computed from the
+    query index reaches the scan as PartitionFilters, and the query is
+    hashed on the driver -- no Arrow UDF in the plan."""
+    from go_lsh_spark.config import LSHConfig, SearchOptions
+    from go_lsh_spark.engine import SparkLSH
+    from go_lsh_spark.operators import search as S
+
+    docs = spark.createDataFrame(
+        [(i, (i % 8) * 7200, [float(i % 5), 1.0, -1.0]) for i in range(32)],
+        "uid long, index long, vector array<double>",
+    )
+    eng = SparkLSH(spark, LSHConfig(num_tables=4)).index(docs, merge_series=False, cache=False)
+    path = str(tmp_path / "buckets")
+    eng.buckets.write.partitionBy("row_index").parquet(path)
+    stored = spark.read.parquet(path)
+
+    res = S.search_vector(
+        spark, [2.0, 1.0, -1.0], 7200, stored, eng.forward, eng.cfg, eng.planes,
+        SearchOptions(max_lag=900, threshold=0.0),
+    )
+    plan = explain_str(res.scores, "formatted")
+    assert "PartitionFilters: [" in plan
+    pruning = plan.split("PartitionFilters")[1][:200]
+    # [7200 - 900, 7200 + 900] lies in row 7200 alone
+    assert "row_index" in pruning and "7200" in pruning, pruning
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    assert {r["index"] for r in res.scores.collect()} <= {7200}
+
+
 def test_candidate_pairs_plan_has_no_window(spark):
     """Bucket sizing must be a map-side-combined aggregate + join, never a
     window function: a window partition must fit one task, so a degenerate
