@@ -156,12 +156,11 @@ class DedupConfig:
     # 50k is a heuristic midpoint between the two measured scales.
     sizing_join_max_clips: int = 50_000
     # broadcast tier (below the sizing tier): at or below this many clips
-    # the whole cold bucket table (~60 rows/clip x ~40B) fits comfortably
-    # under a broadcast, so the candidate self-join and the verify
+    # the signature table fits comfortably under a broadcast, so the verify
     # signature joins use broadcast hash joins -- zero exchanges of the
-    # bucket/pair stream -- instead of the shuffled hash joins that are the
-    # only safe choice at corpus scale. Same rows out; at 2k clips the
-    # shuffled plan's ~6 exchanges were pure fixed cost.
+    # pair stream -- instead of the shuffled hash joins that are the only
+    # safe choice at corpus scale. Same rows out; at 2k clips the shuffled
+    # plan's exchanges were pure fixed cost.
     broadcast_join_max_clips: int = 20_000
     # connected components
     max_cc_iterations: int = 20

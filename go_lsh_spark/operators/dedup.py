@@ -10,7 +10,7 @@ Stages (each a checkpointable Warehouse stage):
   3. buckets:    explode band ids -> (src, band, hash, clip_id); same shape
                  for the MinHash bands. Mirrors the reference's bucket
                  tables flattened to rows (/root/reference/tables/tables.go:43-50).
-  4. candidate_pairs: skew-aware self-join per bucket (a.clip_id < b.clip_id)
+  4. candidate_pairs: all pairs inside each bucket (clip_id_a < clip_id_b)
                  -- the all-pairs form of the reference's Filter equi-join
                  (tables/tables.go:129-137; SURVEY.md §3.2 "every row is a
                  query").
@@ -21,16 +21,21 @@ Stages (each a checkpointable Warehouse stage):
                  suffix-array longest-common-substring >= min length.
   6. clusters:   connected components over verified pairs -> cluster ids.
 
-Skew handling (SURVEY.md §4): bucket sizes are counted first; buckets above
-max_bucket_size generate pairs through a salted triangle join -- members get
-R salt shards, pairs come from shard-pairs (i <= j), spreading a hot
-bucket's |B|^2/2 pair generation over R(R+1)/2 tasks without losing any
-pair. Cold buckets take the plain self-join (AQE skew-join also on).
+Skew handling (SURVEY.md §4): bucket sizes are counted first; a cold bucket
+(at most max_bucket_size members) gathers its members into one bounded list
+and pairs them inside it. Buckets above max_bucket_size generate pairs
+through a salted shard join -- members get R salt shards, pairs come from
+shard pairs, spreading a hot bucket's |B|^2/2 pair generation over R^2
+tasks without losing any pair. That hot branch is built only when a bucket
+can exceed the cap: a bucket holds at most one row per input row, so with
+n_clips <= max_bucket_size no bucket is hot and the branch is left out.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cache
+from types import MappingProxyType
 from typing import Iterator
 
 import numpy as np
@@ -40,21 +45,11 @@ from pyspark.sql import functions as F
 from go_lsh_spark.config import DedupConfig
 from go_lsh_spark.functions import text as T
 from go_lsh_spark.functions import vector as V
-from go_lsh_spark.functions.audio import make_decode_features_udf
 from go_lsh_spark.hyperplanes import PlaneSet
 from go_lsh_spark.operators.connected_components import connected_components_auto
 from go_lsh_spark.operators.suffix import lcs_pairs
 
 _I64_MAX = (1 << 63) - 1  # the empty-shingle MinHash sentinel (fasthash.py:58)
-
-
-def extract_features(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
-    decode = make_decode_features_udf(cfg.feature_dim)
-    return clips.select(
-        "clip_id",
-        decode(F.col("bytes"), F.col("codec")).alias("features"),
-        "transcript",
-    )
 
 
 def clips_to_signatures(clips: DataFrame, cfg: DedupConfig, planes: PlaneSet) -> DataFrame:
@@ -155,73 +150,54 @@ def clips_to_signatures(clips: DataFrame, cfg: DedupConfig, planes: PlaneSet) ->
 # Column objects are plain reusable expression wrappers over fixed column
 # names; building the big trees below costs hundreds of py4j round trips,
 # which the frozen bench re-times at every pipeline construction (the same
-# device as entry_queries._plane_lit_cached). Keyed by the config fields
-# each expression actually reads -- a different config always gets a fresh
-# tree, so the caches can never change what any pipeline computes.
-_EXPR_CACHE: dict = {}
+# device as entry_queries._plane_lit_cached). Each builder is memoized on
+# the whole frozen DedupConfig, never on hand-picked fields: a different
+# config always gets a fresh tree, so a tree that starts reading a new field
+# cannot go stale and the caches never change what a pipeline computes.
 
 
-def _cached_expr(key, build):
-    col = _EXPR_CACHE.get(key)
-    if col is None:
-        col = build()
-        _EXPR_CACHE[key] = col
-    return col
-
-
+@cache
 def _bucket_entries_col(cfg: DedupConfig) -> F.Column:
     """The inline-explode entries of build_buckets as one cached Column."""
 
-    def _build() -> F.Column:
-        def _entry(src: str, band, hash_col) -> F.Column:
-            return F.struct(
-                F.lit(src).alias("src"),
-                (band if not isinstance(band, int) else F.lit(band)).alias("band"),
-                hash_col.cast("long").alias("hash"),
-            )
-
-        audio = F.array(
-            *[
-                _entry("simhash", b, V.band_hash("sig64", b, cfg.rows_per_band))
-                for b in range(cfg.num_bands)
-            ]
+    def _entry(src: str, band, hash_col) -> F.Column:
+        return F.struct(
+            F.lit(src).alias("src"),
+            (band if not isinstance(band, int) else F.lit(band)).alias("band"),
+            hash_col.cast("long").alias("hash"),
         )
-        # empty/short transcripts produce the all-int64.max sentinel MinHash
-        # signature (functions/fasthash.py:58); emitting their bands would
-        # collide every transcript-less clip in one bucket and falsely verify
-        # them as duplicates (jaccard_estimate(sentinel, sentinel) == 1.0)
-        text = F.when(
-            F.element_at("minhash", 1) != F.lit(_I64_MAX),
-            F.array(
-                *[
-                    _entry(
-                        "minhash", b, T.minhash_band_hash("minhash", b, cfg.minhash_rows)
-                    )
-                    for b in range(cfg.minhash_bands)
-                ]
-            ),
-        ).otherwise(F.array().cast("array<struct<src:string,band:int,hash:bigint>>"))
-        # winnowing fingerprints: the suffix-array path's candidate source --
-        # a common substring of >= winnow_k + winnow_window - 1 chars
-        # guarantees a shared fingerprint (Schleimer et al. 2003). The
-        # per-clip fingerprint array is already distinct (np.unique in
-        # winnow_from_hashes), so the explode emits unique (hash, clip_id)
-        # with no dedup shuffle. The stop-gram document-frequency cap
-        # (winnow_max_df) is NOT applied here: candidate_pairs already sizes
-        # every bucket, and for winnow buckets size == df, so the cap folds
-        # into that one groupBy for free instead of costing its own
-        # groupBy + semi-join pass over the fingerprints.
-        winnow = F.transform("winnow", lambda h: _entry("winnow", F.lit(0), h))
-        return F.inline(F.concat(audio, text, winnow))
 
-    key = (
-        "bucket_entries",
-        cfg.num_bands,
-        cfg.rows_per_band,
-        cfg.minhash_bands,
-        cfg.minhash_rows,
+    audio = F.array(
+        *[
+            _entry("simhash", b, V.band_hash("sig64", b, cfg.rows_per_band))
+            for b in range(cfg.num_bands)
+        ]
     )
-    return _cached_expr(key, _build)
+    # empty/short transcripts produce the all-int64.max sentinel MinHash
+    # signature (functions/fasthash.py:58); emitting their bands would
+    # collide every transcript-less clip in one bucket and falsely verify
+    # them as duplicates (jaccard_estimate(sentinel, sentinel) == 1.0)
+    text = F.when(
+        F.element_at("minhash", 1) != F.lit(_I64_MAX),
+        F.array(
+            *[
+                _entry("minhash", b, T.minhash_band_hash("minhash", b, cfg.minhash_rows))
+                for b in range(cfg.minhash_bands)
+            ]
+        ),
+    ).otherwise(F.array().cast("array<struct<src:string,band:int,hash:bigint>>"))
+    # winnowing fingerprints: the suffix-array path's candidate source --
+    # a common substring of >= winnow_k + winnow_window - 1 chars
+    # guarantees a shared fingerprint (Schleimer et al. 2003). The
+    # per-clip fingerprint array is already distinct (np.unique in
+    # winnow_from_hashes), so the explode emits unique (hash, clip_id)
+    # with no dedup shuffle. The stop-gram document-frequency cap
+    # (winnow_max_df) is NOT applied here: candidate_pairs already sizes
+    # every bucket, and for winnow buckets size == df, so the cap folds
+    # into that one groupBy for free instead of costing its own
+    # groupBy + semi-join pass over the fingerprints.
+    winnow = F.transform("winnow", lambda h: _entry("winnow", F.lit(0), h))
+    return F.inline(F.concat(audio, text, winnow))
 
 
 def build_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -229,7 +205,7 @@ def build_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     (src, band, hash, clip_id, sig64) with src in {'simhash','minhash',
     'winnow'}. sig64 rides along (8 bytes/row) so the verify stage's Hamming
     pre-filter needs NO join back to signatures -- candidate pairs emerge
-    from the bucket self-join already carrying both signatures.
+    from the bucket member lists already carrying both signatures.
 
     ONE pass over the signatures instead of a three-branch union (which
     scanned the table three times and tripled the downstream partition
@@ -242,105 +218,72 @@ def build_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     ).select(*cols)
 
 
-def candidate_pairs(
-    buckets: DataFrame, cfg: DedupConfig, n_clips: int | None = None
-) -> DataFrame:
-    """Distinct (clip_id_a < clip_id_b) pairs sharing any bucket, with the
-    evidence sources that produced them. Skew-split: see module docstring.
+def _pair_ok(src: F.Column, a, b, cfg: DedupConfig) -> F.Column:
+    """Pair-generation predicate over two bucket members; `a` and `b` map a
+    member field name to its Column. Id order, plus the Hamming budget for
+    simhash-sourced pairs: a banded collision with a far-apart full
+    signature can never pass verify's audio gate (hamming <= max_hamming),
+    so killing it before the distinct-pair aggregation shuffle changes
+    nothing downstream and removes the dominant false-candidate stream.
+    minhash/winnow pairs pass through (their evidence is textual)."""
+    return (a("clip_id") < b("clip_id")) & (
+        (src != F.lit("simhash"))
+        | (V.hamming64(a("sig64"), b("sig64")) <= cfg.max_hamming)
+    )
 
-    Two physically different sizing plans produce the identical pair set;
-    the switch is a corpus-size cost decision (cfg.sizing_join_max_clips):
 
-    * SMALL (n_clips known and <= threshold): one map-side-combined groupBy
-      + one sizes join classifies every bucket row in a single pass --
-      measured ~6% faster end-to-end at 2k clips, where the extra passes of
-      the big plan cost more than the sizes join saves.
-    * LARGE (default when unknown): only the EXCEPTIONAL key sets leave the
-      size aggregate (stop-gram-capped winnow fingerprints and over-cap hot
-      buckets); the bucket table is filtered with anti/semi joins against
-      those sets with NO broadcast hint -- AQE picks a broadcast join at
-      runtime when the sets are small (the overwhelmingly common case: no
-      shuffle of the bucket table at all) and falls back to a shuffle join
-      when a pathological corpus makes them large, so the plan stays safe
-      at 10^12 clips. Replacing the unconditional sizes join this way
-      measured ~35% off the whole candidate stage at 500k clips.
-    """
-    key = ["src", "band", "hash"]
-    # bucket sizes via a map-side-combined groupBy, NOT a window count: a
-    # window partition must fit one task, so a degenerate hot bucket would
-    # land its entire membership in a single task *before* the salting below
-    # could act
-    sizes = buckets.groupBy(*key).agg(F.count(F.lit(1)).alias("_bsize"))
-    small = n_clips is not None and n_clips <= cfg.sizing_join_max_clips
-    if small:
-        sized_keys = sizes.filter(F.col("_bsize") > 1).filter(
-            # stop-gram cap: a winnow fingerprint's bucket size IS its
-            # document frequency ((hash, clip_id) rows are unique), so
-            # fingerprints in more than winnow_max_df docs drop here, in
-            # the same size pass the skew split needs anyway
-            (F.col("src") != "winnow") | (F.col("_bsize") <= cfg.winnow_max_df)
+def _pair_cols(a, b) -> list[F.Column]:
+    return [
+        a("clip_id").alias("clip_id_a"),
+        b("clip_id").alias("clip_id_b"),
+        a("sig64").alias("sig64_a"),
+        b("sig64").alias("sig64_b"),
+    ]
+
+
+@cache
+def _cold_pairs_col(cfg: DedupConfig) -> F.Column:
+    """Generator over one member `x` of a cold bucket: every pair (x, y) of
+    its `members` list that passes _pair_ok."""
+    x = F.col("x").getField
+    return F.inline(
+        F.transform(
+            F.filter("members", lambda y: _pair_ok(F.col("src"), x, y.getField, cfg)),
+            lambda y: F.struct(*_pair_cols(x, y.getField)),
         )
-        sized = buckets.join(sized_keys, key)
-        cold = sized.filter(F.col("_bsize") <= cfg.max_bucket_size).drop("_bsize")
-        hot = sized.filter(F.col("_bsize") > cfg.max_bucket_size).drop("_bsize")
-    else:
-        capped = sizes.filter(
-            (F.col("src") == "winnow") & (F.col("_bsize") > cfg.winnow_max_df)
-        ).select(*key)
-        hot_keys = sizes.filter(
-            (F.col("_bsize") > cfg.max_bucket_size)
-            & ((F.col("src") != "winnow") | (F.col("_bsize") <= cfg.winnow_max_df))
-        ).select(*key)
-        cold = buckets.join(capped, key, "left_anti").join(hot_keys, key, "left_anti")
-        hot = buckets.join(hot_keys, key, "left_semi")
-
-    pair_cols = _cached_expr(
-        "pair_cols",
-        lambda: [
-            F.col("a.src").alias("src"),
-            F.col("a.clip_id").alias("clip_id_a"),
-            F.col("b.clip_id").alias("clip_id_b"),
-            F.col("a.sig64").alias("sig64_a"),
-            F.col("b.sig64").alias("sig64_b"),
-        ],
-    )
-    # Hamming budget applied AT pair generation for simhash-sourced rows:
-    # a banded collision with a far-apart full signature can never pass
-    # verify's audio gate (which requires hamming <= max_hamming), so
-    # killing it here -- before the distinct-pair aggregation shuffle --
-    # changes nothing downstream and removes the dominant false-candidate
-    # stream. minhash/winnow rows pass through (their evidence is textual).
-    ham_ok = _cached_expr(
-        ("ham_ok", cfg.max_hamming),
-        lambda: (F.col("a.src") != F.lit("simhash"))
-        | (V.hamming64(F.col("a.sig64"), F.col("b.sig64")) <= cfg.max_hamming),
-    )
-    # join strategy by corpus size (guide §3.1: pick it deliberately):
-    #   tiny  (n_clips <= broadcast_join_max_clips): broadcast the build
-    #         side -- the cold bucket table is a few MB, and the shuffled
-    #         plan's exchanges are pure fixed cost at this scale;
-    #   else  shuffle_hash: the equal-sized self-join would otherwise
-    #         SortMergeJoin, paying two full sorts of the bucket table; a
-    #         shuffled hash join skips them (hash join spills since Spark
-    #         3.2, and AQE skew handling still applies)
-    tiny = n_clips is not None and n_clips <= cfg.broadcast_join_max_clips
-    join_hint = "broadcast" if tiny else "shuffle_hash"
-    pairs = (
-        cold.alias("a")
-        .hint(join_hint)
-        .join(
-            cold.alias("b"),
-            [
-                F.col("a.src") == F.col("b.src"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.hash") == F.col("b.hash"),
-                F.col("a.clip_id") < F.col("b.clip_id"),
-            ],
-        )
-        .filter(ham_ok)
-        .select(*pair_cols)
     )
 
+
+@cache
+def _pair_exprs(cfg: DedupConfig) -> tuple:
+    """(aggregates, output columns, evidence filter) of the distinct-pair
+    aggregation."""
+    aggs = (
+        F.max((F.col("src") == "simhash").cast("int")).alias("from_simhash"),
+        F.max((F.col("src") == "minhash").cast("int")).alias("from_minhash"),
+        F.sum((F.col("src") == "winnow").cast("int")).alias("n_winnow"),
+        F.first("sig64_a").alias("sig64_a"),
+        F.first("sig64_b").alias("sig64_b"),
+    )
+    # one shared fingerprint is noise (common word pair); a genuine
+    # >=min_common_substring-char overlap shares several. Pairs with no
+    # other evidence and too few shared fingerprints are dropped here,
+    # before the expensive verify stage.
+    from_winnow = (F.col("n_winnow") >= cfg.winnow_min_matches).cast("int")
+    cols = (
+        "clip_id_a", "clip_id_b", "from_simhash", "from_minhash", "sig64_a",
+        "sig64_b", from_winnow.alias("from_winnow"),
+    )
+    evidence = (
+        (F.col("from_simhash") == 1)
+        | (F.col("from_minhash") == 1)
+        | (F.col("from_winnow") == 1)
+    )
+    return aggs, cols, evidence
+
+
+def _salted_hot_pairs(hot: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Pairs of the hot buckets' rows through the R^2 salted shard join."""
     R = cfg.salt_factor
     hot_salted = hot.withColumn("salt", F.pmod(F.xxhash64("clip_id"), F.lit(R)))
     # all R^2 ordered (salt_i, salt_j) shards: a pair (x < y) matches exactly
@@ -356,51 +299,160 @@ def candidate_pairs(
     ha = hot_salted.crossJoin(F.broadcast(salt_pairs)).filter(
         F.col("salt") == F.col("salt_i")
     ).alias("a")
-    hb = hot_salted.alias("b")
-    hot_pairs = ha.join(
-        hb,
-        [
-            F.col("a.src") == F.col("b.src"),
-            F.col("a.band") == F.col("b.band"),
-            F.col("a.hash") == F.col("b.hash"),
-            F.col("a.salt_j") == F.col("b.salt"),
-            F.col("a.clip_id") < F.col("b.clip_id"),
-        ],
-    ).filter(ham_ok).select(*pair_cols)
 
-    agg_cols = _cached_expr(
-        "pair_agg_cols",
-        lambda: [
-            F.max(F.when(F.col("src") == "simhash", 1).otherwise(0)).alias(
-                "from_simhash"
-            ),
-            F.max(F.when(F.col("src") == "minhash", 1).otherwise(0)).alias(
-                "from_minhash"
-            ),
-            F.sum(F.when(F.col("src") == "winnow", 1).otherwise(0)).alias("n_winnow"),
-            F.first("sig64_a").alias("sig64_a"),
-            F.first("sig64_b").alias("sig64_b"),
-        ],
-    )
+    def a(f: str) -> F.Column:
+        return F.col(f"a.{f}")
+
+    def b(f: str) -> F.Column:
+        return F.col(f"b.{f}")
+
     return (
-        pairs.unionByName(hot_pairs)
-        .groupBy("clip_id_a", "clip_id_b")
-        .agg(*agg_cols)
-        # one shared fingerprint is noise (common word pair); a genuine
-        # >=min_common_substring-char overlap shares several. Pairs with no
-        # other evidence and too few shared fingerprints are dropped here,
-        # before the expensive verify stage.
-        .withColumn(
-            "from_winnow",
-            (F.col("n_winnow") >= cfg.winnow_min_matches).cast("int"),
+        ha.join(
+            hot_salted.alias("b"),
+            [a(f) == b(f) for f in ("src", "band", "hash")] + [a("salt_j") == b("salt")],
         )
-        .filter(
-            (F.col("from_simhash") == 1)
-            | (F.col("from_minhash") == 1)
-            | (F.col("from_winnow") == 1)
-        )
-        .drop("n_winnow")
+        .filter(_pair_ok(a("src"), a, b, cfg))
+        .select(a("src").alias("src"), *_pair_cols(a, b))
     )
+
+
+def _bucket_size_ok(size: F.Column, cfg: DedupConfig) -> F.Column:
+    # two or more members and not a stop-gram: a winnow fingerprint's bucket
+    # size IS its document frequency ((hash, clip_id) rows are unique), so
+    # fingerprints in more than winnow_max_df docs drop in the size pass the
+    # skew split needs anyway
+    return (size > 1) & ((F.col("src") != "winnow") | (size <= cfg.winnow_max_df))
+
+
+def candidate_pairs(
+    buckets: DataFrame, cfg: DedupConfig, n_clips: int | None = None
+) -> DataFrame:
+    """Distinct (clip_id_a < clip_id_b) pairs sharing any bucket, with the
+    evidence sources that produced them. Skew-split: see module docstring.
+
+    Cold pairs come from one per-bucket member aggregate,
+    collect_list(struct(clip_id, sig64)), paired inside the bucket with the
+    Hamming gate applied there (_cold_pairs_col); a cold bucket has at most
+    max_bucket_size members, so the list is bounded. A self-join of the
+    bucket table would re-derive the sized table on each side: AQE does not
+    reuse an exchange above a cached relation that one query reads twice.
+
+    Two physically different sizing plans produce the identical pair set;
+    the switch is a corpus-size cost decision (cfg.sizing_join_max_clips):
+
+    * SMALL (n_clips known and <= threshold): the member aggregate is the
+      size pass -- one groupBy sizes, caps and gathers every bucket in a
+      single read of the bucket table. A hot bucket's list is bounded by
+      n_clips; it is exploded back to rows for the salted join.
+    * LARGE (default when unknown): only the EXCEPTIONAL key sets leave a
+      count aggregate (stop-gram-capped winnow fingerprints and over-cap hot
+      buckets); the bucket table is filtered with anti/semi joins against
+      those sets with NO broadcast hint -- AQE picks a broadcast join at
+      runtime when the sets are small (the overwhelmingly common case: no
+      shuffle of the bucket table at all) and falls back to a shuffle join
+      when a pathological corpus makes them large, so the plan stays safe
+      at 10^12 clips. The member aggregate then sees cold rows only.
+      Keeping full sizes off the bucket table this way measured ~35% off
+      the candidate stage at 500k clips.
+    """
+    key = ["src", "band", "hash"]
+    # a (src, band, hash) bucket holds at most one row per input row, so
+    # with n_clips <= max_bucket_size no bucket can be hot
+    may_be_hot = n_clips is None or n_clips > cfg.max_bucket_size
+    members = F.collect_list(F.struct("clip_id", "sig64")).alias("members")
+    n_members = F.size("members")
+    hot = None
+    # bucket sizes via a map-side-combined groupBy, NOT a window count: a
+    # window partition must fit one task, so a degenerate hot bucket would
+    # land its entire membership in a single task *before* the salting below
+    # could act
+    if n_clips is not None and n_clips <= cfg.sizing_join_max_clips:
+        cold = buckets.groupBy(*key).agg(members).filter(
+            _bucket_size_ok(n_members, cfg)
+        )
+        if may_be_hot:
+            hot = cold.filter(n_members > cfg.max_bucket_size).select(
+                *key, F.inline("members")
+            )
+            cold = cold.filter(n_members <= cfg.max_bucket_size)
+    else:
+        sizes = buckets.groupBy(*key).agg(F.count(F.lit(1)).alias("_bsize"))
+        capped = (F.col("src") == "winnow") & (F.col("_bsize") > cfg.winnow_max_df)
+        over_cap = ~capped & (F.col("_bsize") > cfg.max_bucket_size)
+        dropped = capped
+        if may_be_hot:
+            hot = buckets.join(sizes.filter(over_cap).select(*key), key, "left_semi")
+            dropped = capped | over_cap
+        cold = (
+            buckets.join(sizes.filter(dropped).select(*key), key, "left_anti")
+            .groupBy(*key)
+            .agg(members)
+            .filter(n_members > 1)
+        )
+
+    pairs = cold.select("src", "members", F.explode("members").alias("x")).select(
+        "src", _cold_pairs_col(cfg)
+    )
+    if hot is not None:
+        pairs = pairs.unionByName(_salted_hot_pairs(hot, cfg))
+
+    aggs, cols, evidence = _pair_exprs(cfg)
+    return pairs.groupBy("clip_id_a", "clip_id_b").agg(*aggs).select(*cols).filter(evidence)
+
+
+_VERIFIED_COLS = (
+    "clip_id_a", "clip_id_b", "from_simhash", "from_minhash", "from_winnow",
+    "hamming", "score", "jaccard_est", "audio_ok", "text_ok",
+)
+
+
+@cache
+def _verify_exprs(cfg: DedupConfig) -> MappingProxyType:
+    """The column lists and predicates of verify_pairs, built once per
+    config."""
+    # jaccard of two empty-transcript sentinel signatures is vacuously 1.0;
+    # a missing transcript is no text evidence at all -> NULL (fails text_ok)
+    sentinel = (F.element_at("minhash_a", 1) == F.lit(_I64_MAX)) | (
+        F.element_at("minhash_b", 1) == F.lit(_I64_MAX)
+    )
+    audio_ok = (
+        (F.col("hamming") <= cfg.max_hamming)
+        & F.col("score").isNotNull()
+        & (F.col("score") >= cfg.threshold)
+    )
+    text_ok = F.coalesce(F.col("jaccard_est") >= cfg.jaccard_threshold, F.lit(False))
+    cheap = F.col("audio_ok") | F.col("text_ok")
+    return MappingProxyType({
+        "pairs": (
+            *_VERIFIED_COLS[:5], V.hamming64("sig64_a", "sig64_b").alias("hamming")
+        ),
+        "ham_gate": (F.col("hamming") <= cfg.max_hamming)
+        | (F.col("from_minhash") == 1)
+        | (F.col("from_winnow") == 1),
+        "scored": (
+            *_VERIFIED_COLS[:6],
+            V.pearson("features_a", "features_b").alias("score"),
+            F.when(sentinel, F.lit(None).cast("double"))
+            .otherwise(T.jaccard_estimate("minhash_a", "minhash_b"))
+            .alias("jaccard_est"),
+        ),
+        "gated": (
+            *_VERIFIED_COLS[:8],
+            audio_ok.alias("audio_ok"),
+            text_ok.alias("text_ok"),
+            (~(audio_ok | text_ok) & (F.col("from_winnow") == 1)).alias("needs_lcs"),
+        ),
+        # rows that fail the cheap gates without winnowing evidence can
+        # pass nothing: drop them before the transcript joins
+        "may_pass": cheap | (F.col("from_winnow") == 1),
+        "tr_a_on": (F.col("clip_id_a") == F.col("_tr_id_a")) & F.col("needs_lcs"),
+        "tr_b_on": (F.col("clip_id_b") == F.col("_tr_id_b")) & F.col("needs_lcs"),
+        "verified": (
+            *_VERIFIED_COLS,
+            F.when(F.col("needs_lcs"), F.col("lcs_len")).alias("lcs_len"),
+        ),
+        "passed": cheap | (F.col("lcs_len") >= cfg.min_common_substring),
+    })
 
 
 def verify_pairs(
@@ -416,44 +468,17 @@ def verify_pairs(
              results/results.go:35-40)
       text:  jaccard_estimate(minhash) >= jaccard_threshold
       substring: lcs_len >= min_common_substring (suffix-array; computed
-             only for pairs that failed the cheap gates -- verification-stage
-             cost control)
+             only for pairs that failed the cheap gates and carry winnowing
+             evidence -- verification-stage cost control)
+
+    One pass: the enriched pair stream is built once. Transcripts attach
+    through conditional left joins (ON clip_id = ... AND needs_lcs) to the
+    rows that need the LCS only; lcs_len is set on exactly those rows and
+    stays NULL elsewhere. (Two branches split off the enriched stream and
+    unioned back would each rebuild its signature joins: AQE does not reuse
+    an exchange above a cached relation.)
     """
-    # phase 1 -- NO join: sig64 rode along on the bucket rows, so the
-    # Hamming budget is a pure filter on the pair stream; simhash-only
-    # pairs above it die here, BEFORE the wide join hauls features +
-    # minhash + transcripts for millions of false candidates (the "more
-    # hyperplanes decrease direct comparisons" knob of the reference,
-    # configs/lshconfigs.go:44, applied post-hoc)
-    with_ham = (
-        pairs.withColumn(
-            "hamming",
-            _cached_expr("hamming", lambda: V.hamming64("sig64_a", "sig64_b")),
-        )
-        .filter(
-            (F.col("hamming") <= cfg.max_hamming)
-            | (F.col("from_minhash") == 1)
-            | (F.col("from_winnow") == 1)
-        )
-        .drop("sig64_a", "sig64_b")
-    )
-    sig_a = signatures.select(
-        F.col("clip_id").alias("clip_id_a"),
-        F.col("features").alias("features_a"),
-        F.col("minhash").alias("minhash_a"),
-    )
-    sig_b = signatures.select(
-        F.col("clip_id").alias("clip_id_b"),
-        F.col("features").alias("features_b"),
-        F.col("minhash").alias("minhash_b"),
-    )
-    # jaccard of two empty-transcript sentinel signatures is vacuously 1.0;
-    # a missing transcript is no text evidence at all -> NULL (fails text_ok)
-    sentinel = _cached_expr(
-        "sentinel",
-        lambda: (F.element_at("minhash_a", 1) == F.lit(_I64_MAX))
-        | (F.element_at("minhash_b", 1) == F.lit(_I64_MAX)),
-    )
+    e = _verify_exprs(cfg)
     # join strategy: below broadcast_join_max_clips the signature table
     # broadcasts and the pair stream is never exchanged; at corpus scale
     # the shuffled hash join is the only safe shape (the signature side
@@ -465,68 +490,35 @@ def verify_pairs(
     tiny = n_clips is not None and n_clips <= cfg.broadcast_join_max_clips
     _hint = "broadcast" if tiny else "shuffle_hash"
 
-    def _side(df: DataFrame) -> DataFrame:
+    def _side(key: str, side: str, *cols: str) -> DataFrame:
+        df = signatures.select(
+            F.col("clip_id").alias(key), *[F.col(c).alias(f"{c}_{side}") for c in cols]
+        )
         return df if adaptive_joins else df.hint(_hint)
 
-    enriched = (
-        with_ham.join(_side(sig_a), "clip_id_a")
-        .join(_side(sig_b), "clip_id_b")
-        .withColumn(
-            "score",
-            _cached_expr("pearson", lambda: V.pearson("features_a", "features_b")),
-        )
-        .withColumn(
-            "jaccard_est",
-            _cached_expr(
-                "jaccard_est",
-                lambda: F.when(sentinel, F.lit(None).cast("double")).otherwise(
-                    T.jaccard_estimate("minhash_a", "minhash_b")
-                ),
-            ),
-        )
+    # the Hamming budget is a pure filter on the pair stream (sig64 rode
+    # along on the bucket rows): simhash-only pairs above it die BEFORE the
+    # wide join hauls features + minhash for millions of false candidates
+    # (the "more hyperplanes decrease direct comparisons" knob of the
+    # reference, configs/lshconfigs.go:44, applied post-hoc)
+    scored = (
+        pairs.select(*e["pairs"])
+        .filter(e["ham_gate"])
+        .join(_side("clip_id_a", "a", "features", "minhash"), "clip_id_a")
+        .join(_side("clip_id_b", "b", "features", "minhash"), "clip_id_b")
+        .select(*e["scored"])
+        .select(*e["gated"])
+        .filter(e["may_pass"])
     )
-    audio_ok = _cached_expr(
-        ("audio_ok", cfg.max_hamming, cfg.threshold),
-        lambda: (F.col("hamming") <= cfg.max_hamming)
-        & F.col("score").isNotNull()
-        & (F.col("score") >= cfg.threshold),
-    )
-    text_ok = _cached_expr(
-        ("text_ok", cfg.jaccard_threshold),
-        lambda: F.col("jaccard_est") >= cfg.jaccard_threshold,
-    )
-    cheap = enriched.withColumn("audio_ok", audio_ok).withColumn(
-        "text_ok", F.coalesce(text_ok, F.lit(False))
-    )
-    passed_cheap = cheap.filter(F.col("audio_ok") | F.col("text_ok")).withColumn(
-        "lcs_len", F.lit(None).cast("int")
-    )
-    # suffix-array LCS only where substring evidence is possible: pairs the
-    # winnowing fingerprints surfaced (cost control -- LCS is the expensive
-    # verifier and simhash/minhash misses carry no substring signal).
-    # Transcripts join HERE, onto the needs_lcs subset only -- hauling them
-    # onto every enriched pair would dominate the verify-stage shuffle width
-    # at scale for rows that never read them.
-    needs_lcs = cheap.filter(
-        ~(F.col("audio_ok") | F.col("text_ok")) & (F.col("from_winnow") == 1)
-    )
-    tr_a = signatures.select(
-        F.col("clip_id").alias("clip_id_a"), F.col("transcript").alias("transcript_a")
-    )
-    tr_b = signatures.select(
-        F.col("clip_id").alias("clip_id_b"), F.col("transcript").alias("transcript_b")
-    )
-    needs_lcs = needs_lcs.join(_side(tr_a), "clip_id_a").join(
-        _side(tr_b), "clip_id_b"
-    )
-    with_lcs = lcs_pairs(needs_lcs).filter(
-        F.col("lcs_len") >= cfg.min_common_substring
-    )
-    cols = [
-        "clip_id_a", "clip_id_b", "from_simhash", "from_minhash", "from_winnow",
-        "hamming", "score", "jaccard_est", "audio_ok", "text_ok", "lcs_len",
-    ]
-    return passed_cheap.select(*cols).unionByName(with_lcs.select(*cols))
+    # transcripts join onto the needs_lcs rows only -- hauling them onto
+    # every enriched pair would dominate the verify-stage shuffle width at
+    # scale for rows that never read them. Spark runs the LCS UDF on every
+    # row (a Python UDF under CASE WHEN is not short-circuited); the other
+    # rows reach it with NULL transcripts and cost no suffix array.
+    with_text = scored.join(
+        _side("_tr_id_a", "a", "transcript"), e["tr_a_on"], "left"
+    ).join(_side("_tr_id_b", "b", "transcript"), e["tr_b_on"], "left")
+    return lcs_pairs(with_text).select(*e["verified"]).filter(e["passed"])
 
 
 def cluster_assignments(
@@ -590,18 +582,17 @@ def dedup_pipeline(
         # cache signatures and materialize them ONCE (the Python-UDF decode
         # stage is the expensive pass; a cached DataFrame scanned N times
         # within one job is computed N times if nothing populated the cache
-        # first -- observed 6x slowdown). buckets is cached lazily: its
-        # recompute is a JVM-side explode over the already-cached signatures,
-        # so a second driver-side count barrier buys nothing and serializes
-        # the pipeline (r1 scaling-gate finding).
+        # first -- observed 6x slowdown). buckets and pairs are not cached:
+        # each feeds the next stage once, buckets' recompute is a JVM-side
+        # explode over the cached signatures, and under AQE a cache costs
+        # its own job even when one query reads it once. n_clips rides
+        # along (already materialized for the cache) so the plan switches
+        # cost no extra action.
         signatures = clips_to_signatures(clips, cfg, planes).cache()
         n_clips = signatures.count()
         features = signatures.select("clip_id", "features")
-        buckets = build_buckets(signatures, cfg).cache()
-        # pairs feeds verify exactly once -> lazy cache, no extra job.
-        # n_clips rides along (already materialized for the cache) so the
-        # sizing plan switch costs no extra action.
-        pairs = candidate_pairs(buckets, cfg, n_clips=n_clips).cache()
+        buckets = build_buckets(signatures, cfg)
+        pairs = candidate_pairs(buckets, cfg, n_clips=n_clips)
         verified = verify_pairs(pairs, signatures, cfg, n_clips=n_clips).cache()
         clusters = cluster_assignments(clips, verified, cfg)
         return DedupResult(features, signatures, buckets, pairs, verified, clusters)

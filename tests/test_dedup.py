@@ -480,3 +480,90 @@ def test_pipeline_matches_independent_oracle_exactly(spark):
         for r in dedup_pipeline(spark, df, DedupConfig()).clusters.collect()
     }
     assert got == expected
+
+
+def test_cached_trees_key_on_whole_config(spark):
+    """The memoized expression trees are keyed on the whole frozen
+    DedupConfig: one config reuses its trees, and configs that differ in one
+    field a tree reads (max_hamming, rows_per_band) get different trees and
+    different candidate pairs."""
+    from go_lsh_spark.operators.dedup import (
+        _I64_MAX,
+        _bucket_entries_col,
+        _cold_pairs_col,
+        _verify_exprs,
+        build_buckets,
+        candidate_pairs,
+    )
+
+    base = DedupConfig()
+    tight = DedupConfig(max_hamming=4)
+    narrow = DedupConfig(rows_per_band=8)
+    assert _cold_pairs_col(base) is _cold_pairs_col(DedupConfig())
+    assert _cold_pairs_col(tight) is not _cold_pairs_col(base)
+    assert _verify_exprs(tight) is not _verify_exprs(base)
+    assert _bucket_entries_col(narrow) is not _bucket_entries_col(base)
+
+    # b differs from a by one bit in each of the top four bytes (hamming 4):
+    # 16-bit bands 2 and 3 collide, no 8-bit band over the top 32 bits does.
+    # c differs from a in its five lowest bits (hamming 5): every 8-bit band
+    # and all 16-bit bands but the last collide. b and c share 16-bit band 2
+    # at hamming 9.
+    b = (1 << 56) | (1 << 48) | (1 << 40) | (1 << 32)
+    sigs = spark.createDataFrame(
+        [(cid, sig, [_I64_MAX], []) for cid, sig in (("a", 0), ("b", b), ("c", 31))],
+        "clip_id string, sig64 long, minhash array<long>, winnow array<long>",
+    )
+
+    def pairs(cfg):
+        got = candidate_pairs(build_buckets(sigs, cfg), cfg, n_clips=3).collect()
+        return {(r.clip_id_a, r.clip_id_b) for r in got}
+
+    assert pairs(base) == {("a", "b"), ("a", "c")}
+    assert pairs(tight) == {("a", "b")}
+    assert pairs(narrow) == {("a", "c")}
+
+
+def test_hot_branch_switch_sides_give_identical_rows(spark, corpus, cfg):
+    """candidate_pairs builds the salted hot branch only when a bucket can
+    exceed max_bucket_size (a bucket holds at most one row per clip). Both
+    sides of that switch -- skipped (cap = n_clips), built but empty (cap =
+    n_clips - 1) and built with hot buckets (cap = 3) -- give identical pairs
+    and verified rows, and lcs_len is set exactly on the rows that passed by
+    the suffix-array LCS alone."""
+    from dataclasses import replace
+
+    from go_lsh_spark.operators.dedup import (
+        build_buckets,
+        candidate_pairs,
+        clips_to_signatures,
+        verify_pairs,
+    )
+    from go_lsh_spark.plans.inspect import explain_str
+
+    df, _ = clips_to_spark(spark, corpus)
+    sigs = clips_to_signatures(df, cfg, PlaneSet(cfg.lsh_config())).persist()
+    buckets = build_buckets(sigs, cfg).persist()
+    sizes = buckets.groupBy("src", "band", "hash").count()
+    assert sizes.filter(F.col("src") != "winnow").agg(F.max("count")).first()[0] > 3
+    assert sizes.agg(F.max("count")).first()[0] <= N_CLIPS - 1
+
+    def norm(rows_df):
+        return sorted(tuple(r) for r in rows_df.collect())
+
+    results = []
+    for cap in (N_CLIPS, N_CLIPS - 1, 3):
+        c = replace(cfg, max_bucket_size=cap)
+        pairs = candidate_pairs(buckets, c, n_clips=N_CLIPS)
+        assert ("salt" in explain_str(pairs, "simple")) == (cap < N_CLIPS), cap
+        verified = verify_pairs(pairs, sigs, c, n_clips=N_CLIPS)
+        results.append((norm(pairs), norm(verified)))
+    assert results[0] == results[1] == results[2]
+
+    rows = [dict(zip(verified.columns, r)) for r in results[0][1]]
+    by_lcs = [r for r in rows if not (r["audio_ok"] or r["text_ok"])]
+    assert by_lcs, "fixture has no LCS-only pairs"
+    assert all(r["lcs_len"] >= cfg.min_common_substring for r in by_lcs)
+    assert sum(r["lcs_len"] is not None for r in rows) == len(by_lcs)
+    buckets.unpersist()
+    sigs.unpersist()
