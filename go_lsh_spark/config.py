@@ -73,7 +73,7 @@ class LSHConfig:
         return replace(self, **kwargs)
 
 
-@dataclass
+@dataclass(frozen=True)
 class SearchOptions:
     """Per-search options. Defaults mirror options.NewDefaultSearch
     (options/searchoptions.go:55-62)."""
@@ -87,7 +87,7 @@ class SearchOptions:
         """Mirror options.Search.Validate (options/searchoptions.go:34-52).
 
         Note the reference *clamps* max_lag < -1 to AllLags rather than
-        erroring; we preserve that.
+        erroring; we preserve that by returning a clamped copy.
         """
         if self.num_to_return < 1:
             raise ValueError("invalid NumToReturn, must be at least 1")
@@ -95,9 +95,7 @@ class SearchOptions:
             raise ValueError("invalid threshold, must be between 0 and 1 inclusive")
         if self.sign_filter not in (SIGN_FILTER_ANY, SIGN_FILTER_NEG, SIGN_FILTER_POS):
             raise ValueError("invalid sign filter, must be any, neg, or pos")
-        if self.max_lag < ALL_LAGS:
-            self.max_lag = ALL_LAGS
-        return self
+        return replace(self, max_lag=ALL_LAGS) if self.max_lag < ALL_LAGS else self
 
 
 @dataclass(frozen=True)

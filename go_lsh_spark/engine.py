@@ -5,7 +5,9 @@ SparkLSH is the DataFrame analogue of the reference's LSH struct
 (buckets, forward index) instead of in-memory maps. index / delete /
 search_df build lazy DataFrames (search_df runs one small min/max collect
 over the queries when max_lag >= 0); search, exists, size, uids and stats
-run Spark actions and return driver-side values.
+run Spark actions and return driver-side values. search is a point query
+on literals (operators.search.search_vector): one action returns the
+top-K in rank order and the observed NumScored.
 """
 
 from __future__ import annotations
@@ -63,8 +65,10 @@ class SparkLSH:
 
         Validates query length driver-side before launching any job,
         mirroring ErrInvalidDocument (lsh/lsh.go:107-110). The query is
-        hashed on the driver (operators.search.search_vector), so the whole
-        search is one Spark action."""
+        hashed on the driver and enters the plan as literals
+        (operators.search.search_vector), so the whole search is one Spark
+        action: it collects the <= K rows already in rank order, and an
+        Observation on the scored candidates yields NumScored."""
         if len(vector) != self.cfg.vector_length:
             from go_lsh_spark.oracle import InvalidDocument
 
@@ -76,12 +80,9 @@ class SparkLSH:
             return [], 0  # nothing indexed: OracleLSH / empty reference tables
         num_scored = Observation()
         res = S.search_vector(
-            self.spark, vector, index, self.buckets, self.forward, self.cfg,
-            self.planes, opts, num_scored,
+            vector, index, self.buckets, self.forward, self.cfg, self.planes, opts, num_scored
         )
-        # one action: <= K rows plus the observed NumScored; the rank order
-        # is applied here, not by a global sort
-        rows = sorted(res.scores.collect(), key=lambda r: r["rank"])
+        rows = res.scores.collect()
         return (
             [(r["uid"], r["index"], r["score"]) for r in rows],
             num_scored.get["num_scored"],

@@ -65,7 +65,8 @@ def sample_stddev(vec: Column | str) -> Column:
 def pearson(x: Column | str, y: Column | str) -> Column:
     """Sample Pearson correlation of two equal-length array columns,
     JVM-side (zip_with + aggregate -> codegen). NULL (not NaN) when either
-    side has zero variance, so Spark's NaN-is-largest comparison semantics
+    side has zero variance or the correlation is NaN (NaN or inf
+    components), so Spark's NaN-is-largest comparison semantics
     can never leak a degenerate candidate through `abs(score) >= threshold`
     (Go's NaN always fails that predicate, results/results.go:36)."""
     x = F.col(x) if isinstance(x, str) else x
@@ -117,7 +118,10 @@ def pearson_with_stats(
     )
     cov = sxy - sx * sy / n
     denom = F.sqrt(vx * vy)
-    raw = F.when(denom > 0.0, cov / denom)  # else NULL
+    # NULL for zero variance and for a NaN quotient (NaN or inf inputs):
+    # Spark orders NaN above every number, so NaN would pass both
+    # `denom > 0` and the +1 snap below
+    raw = F.when(denom > 0.0, F.nanvl(cov / denom, F.lit(None).cast("double")))
     # snap to exact +/-1 so threshold=1.0 keeps exact matches (see module doc)
     return (
         F.when(raw > F.lit(1.0 - SNAP_EPS), F.lit(1.0))

@@ -1,4 +1,4 @@
-"""Query path (O7-O14): the full search pipeline as one DataFrame plan.
+"""Query path (O7-O14): search as DataFrame plans.
 
 Reference trace (SURVEY.md §3.2): hash query -> per-table bucket lookup with
 lag-bounded row enumeration (tables/tables.go:103-155) -> union across
@@ -7,31 +7,42 @@ scoring against zero-padded forward-index windows (lsh/lsh.go:212-224) ->
 threshold/sign predicate (results/results.go:35-40) -> bounded top-K sorted
 by descending |score| (results/results.go:43-69).
 
-Spark shape:
-  * goroutine-per-table fan-out (lsh/lsh.go:188-205)  => explode over
-    table_id + ONE shuffle equi-join on (table_id, hash)
-  * lag row enumeration => `row_index BETWEEN start_row AND end_row`
-    range predicate -- pushes down to parquet/Iceberg partition pruning when
-    buckets is partitioned by row_index
-  * mutex-merged candidate union => dropDuplicates
-  * negation trick (lsh/lsh.go:163-166) => second hash column from -v,
-    computed in the same UDF pass (or the same driver matmul)
-  * bounded heap => window row_number (per-query) / ORDER BY..LIMIT (global,
-    Catalyst rewrites to TakeOrderedAndProject)
+Two plan shapes:
+  * search (SparkLSH.search_df, many queries): the Arrow hash UDF explodes
+    each query into (table_id, hash) rows; ONE shuffle equi-join on
+    (table_id, hash) is the goroutine-per-table fan-out
+    (lsh/lsh.go:188-205); the query vectors join back as a broadcast on
+    query_id; top-K is a per-query window row_number.
+  * search_vector (SparkLSH.search, one query): a point query. The driver
+    hashes the query (hyperplanes.hash16_tables), and the hashes and the
+    vector enter the plan as JSON literals -- a constant number of py4j
+    calls whatever num_tables and vector_length. A filter
+    `hash = element_at(hashes, table_id + 1)` on the bucket scan replaces
+    the join, and top-K is ORDER BY .. LIMIT (TakeOrderedAndProject): no
+    query relation, no window, no Python.
+
+Shared: lag row enumeration => `row_index BETWEEN` range predicate, which
+prunes bucket partitions when buckets is partitioned by row_index;
+mutex-merged candidate union => distinct (uid, index); negation trick
+(lsh/lsh.go:163-166) => a second hash of -v. The window-slice, normalize,
+Pearson, threshold and rank-order trees are functools.cache builders keyed
+on the whole frozen LSHConfig / SearchOptions (as in operators/dedup.py),
+so a plan costs py4j calls per query, not per expression node.
 
 Scale notes: the bucket join shuffles on (table_id, hash) -- hot hashes are
-handled by AQE skew-join (enabled in session.py); the scoring join on uid
-broadcasts the candidate side when queries are few. Python in the plan:
-only search's hash-UDF projections (Arrow-batched, not per-row);
-search_vector hashes its one query on the driver, so its plan has none.
+handled by AQE skew-join (enabled in session.py). Python in the plans: only
+search's hash-UDF projections (Arrow-batched, not per-row).
 """
 
 from __future__ import annotations
 
+import json
+import operator
 from dataclasses import dataclass
+from functools import cache, reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -54,12 +65,65 @@ class SearchResult:
     """Lazy handles on the two outputs of Search (scores + NumScored,
     lsh/lsh.go:128)."""
 
-    scores: DataFrame      # query_id, uid, index, score, rank
+    scores: DataFrame      # query_id, uid, index, score (+ rank from search)
     candidates: DataFrame  # pre-threshold scored candidates (NumScored basis)
 
     def num_scored(self) -> dict[int, int]:
         rows = self.candidates.groupBy("query_id").count().collect()
         return {r["query_id"]: r["count"] for r in rows}
+
+
+@cache
+def _score_cols(cfg: LSHConfig) -> tuple[Column, Column, Column, Column]:
+    """(_cvec_raw, _cvec, _qvec, score): the candidate's zero-padded
+    forward-index window at its index (forwardindex/inmemory.go:61-82), the
+    TFunc-transformed candidate and query (`vector`) vectors, and their
+    Pearson score (lsh/lsh.go:212-224)."""
+    raw = V.window_at(
+        "series", "series_index", F.col("index"), cfg.sample_period, cfg.vector_length
+    ).alias("_cvec_raw")
+    tfunc = V.l2_normalize if cfg.normalize else F.col
+    score = V.pearson("_qvec", "_cvec").alias("score")
+    return raw, tfunc("_cvec_raw").alias("_cvec"), tfunc("vector").alias("_qvec"), score
+
+
+@cache
+def _lag_pred(opts: SearchOptions, cfg: LSHConfig) -> Column:
+    """The MaxLag range predicates on a bucket row for the query index in
+    `query_index` (tables/tables.go:109-150)."""
+    if opts.max_lag > ALL_LAGS:
+        start_idx, end_idx, start_row, end_row = lag_bounds(
+            F.col("query_index"), opts.max_lag, cfg.row_size
+        )
+        # row-range predicate prunes bucket partitions; index-range is the
+        # exact timestamp refinement (tables/tables.go:145-150)
+        return F.col("row_index").between(start_row, end_row) & F.col("index").between(
+            start_idx, end_idx
+        )
+    # AllLags keeps [0, MaxInt64]: the reference's startIdx stays at its
+    # zero value (tables/tables.go:109-127), so negative indexes never match
+    return F.col("index") >= 0
+
+
+@cache
+def _passed_col(opts: SearchOptions) -> Column:
+    """O11 (results/results.go:35-40): |score| >= threshold AND sign
+    matches. NULL scores (zero variance, NaN -> Go NaN) always fail."""
+    score = F.col("score")
+    pred = F.abs(score) >= F.lit(opts.threshold)
+    if opts.sign_filter == SIGN_FILTER_POS:
+        pred = pred & (score > 0)
+    elif opts.sign_filter == SIGN_FILTER_NEG:
+        pred = pred & (score < 0)
+    return pred
+
+
+@cache
+def _rank_order() -> tuple[Column, ...]:
+    """O12/O13: descending |score|, ties broken by descending index then
+    uid (inverse of the heap's Less, results/results.go:82-101; Fetch emits
+    descending |score|, results/results.go:59-69)."""
+    return F.abs(F.col("score")).desc(), F.col("index").desc(), F.col("uid").desc()
 
 
 def hash_queries(
@@ -73,30 +137,18 @@ def hash_queries(
     Both arrays come from one UDF projection; explode unions the branches.
     """
     hash_udf = V.make_hash_tables_udf(planes, normalize=cfg.normalize)
-    q = queries
     branches = []
     if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_POS):
-        branches.append(F.col("_pos_hashes"))
-        q = q.withColumn("_pos_hashes", hash_udf(F.col(vector)))
+        branches.append(hash_udf(F.col(vector)).alias("_pos_hashes"))
     if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_NEG):
-        branches.append(F.col("_neg_hashes"))
-        q = q.withColumn(
-            "_neg_hashes", hash_udf(F.transform(F.col(vector), lambda x: -x))
-        )
-    exploded = []
-    for b in branches:
-        exploded.append(
-            q.select(
-                "query_id",
-                F.col("index").cast("long").alias("index"),
-                F.posexplode(b).alias("table_id", "hash"),
-            )
-        )
-    out = exploded[0]
-    for e in exploded[1:]:
-        out = out.unionByName(e)
+        branches.append(hash_udf(F.transform(F.col(vector), lambda x: -x)).alias("_neg_hashes"))
+    q = queries.select("query_id", F.col("index").cast("long").alias("index"), *branches)
+    exploded = (
+        q.select("query_id", "index", F.posexplode(b).alias("table_id", "hash"))
+        for b in q.columns[2:]
+    )
     # same (table_id, hash) from both branches would double-count candidates
-    return out.dropDuplicates(["query_id", "table_id", "hash"])
+    return reduce(DataFrame.unionByName, exploded).dropDuplicates(["query_id", "table_id", "hash"])
 
 
 def candidate_join(
@@ -112,86 +164,27 @@ def candidate_join(
     qh = query_hashes.withColumnRenamed("index", "query_index")
     b = buckets
     cond = [qh.table_id == b.table_id, qh.hash == b.hash]
-    joined = qh.join(b, cond, "inner")
-    if opts.max_lag > ALL_LAGS:
-        start_idx, end_idx, start_row, end_row = lag_bounds(
-            F.col("query_index"), opts.max_lag, cfg.row_size
-        )
-        # row-range predicate prunes bucket partitions; index-range is the
-        # exact timestamp refinement (tables/tables.go:145-150)
-        joined = joined.filter(
-            b.row_index.between(start_row, end_row)
-            & b.index.between(start_idx, end_idx)
-        )
-    else:
-        # AllLags keeps [0, MaxInt64]: the reference's startIdx stays at its
-        # zero value (tables/tables.go:109-127), so negative indexes never match
-        joined = joined.filter(b.index >= 0)
+    joined = qh.join(b, cond, "inner").filter(_lag_pred(opts, cfg))
     return joined.select(
         "query_id", "query_index", b.uid.alias("uid"), b.index.alias("index")
     ).dropDuplicates(["query_id", "uid", "index"])
 
 
 def score_candidates(
-    candidates: DataFrame,
-    queries: DataFrame,
-    forward: DataFrame,
-    cfg: LSHConfig,
-    query_vector="vector",
+    candidates: DataFrame, queries: DataFrame, forward: DataFrame, cfg: LSHConfig
 ) -> DataFrame:
     """O10: join candidates back to the forward index on uid, slice the
-    zero-padded window at the candidate's index (forwardindex/inmemory.go:
-    61-82), and compute Pearson correlation against the (normalized) query
-    (lsh/lsh.go:212-224). Inner joins reproduce the nil-vector skip
-    (lsh/lsh.go:215-217).
-
-    Entirely JVM-side: window slice + Pearson are built-in expressions.
-    """
-    qv = queries.select(
-        "query_id",
-        V.l2_normalize(query_vector).alias("_qvec")
-        if cfg.normalize
-        else F.col(query_vector).alias("_qvec"),
-    )
-    window = V.window_at(
-        "series", "series_index", F.col("index"), cfg.sample_period, cfg.vector_length
-    )
-    cand_vec = (
+    window at the candidate's index and score it against the query's
+    vector, joined as a broadcast on query_id. Inner joins reproduce the
+    nil-vector skip (lsh/lsh.go:215-217). Entirely JVM-side."""
+    raw, cvec, qvec, score = _score_cols(cfg)
+    keys = ("query_id", "uid", "index")
+    return (
         candidates.join(forward, "uid", "inner")
-        .withColumn("_cvec_raw", window)
-        .withColumn(
-            "_cvec", V.l2_normalize("_cvec_raw") if cfg.normalize else F.col("_cvec_raw")
-        )
-    )
-    return (
-        cand_vec.join(F.broadcast(qv), "query_id", "inner")
-        .withColumn("score", V.pearson("_qvec", "_cvec"))
-        .select("query_id", "uid", "index", "score")
-    )
-
-
-def threshold_filter(scored: DataFrame, opts: SearchOptions) -> DataFrame:
-    """O11 (results/results.go:35-40): |score| >= threshold AND sign matches.
-    NULL scores (zero variance -> Go NaN) always fail."""
-    pred = F.col("score").isNotNull() & (F.abs(F.col("score")) >= F.lit(opts.threshold))
-    if opts.sign_filter == SIGN_FILTER_POS:
-        pred = pred & (F.col("score") > 0)
-    elif opts.sign_filter == SIGN_FILTER_NEG:
-        pred = pred & (F.col("score") < 0)
-    return scored.filter(pred)
-
-
-def top_k(passed: DataFrame, k: int) -> DataFrame:
-    """O12/O13: per-query bounded top-K by descending |score|, ties broken by
-    descending index then uid (inverse of the heap's Less,
-    results/results.go:82-101; Fetch emits descending |score|,
-    results/results.go:59-69)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.abs(F.col("score")).desc(), F.col("index").desc(), F.col("uid").desc()
-    )
-    return (
-        passed.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .select(*keys, raw)
+        .select(*keys, cvec)
+        .join(F.broadcast(queries.select("query_id", qvec)), "query_id", "inner")
+        .select(*keys, score)
     )
 
 
@@ -231,8 +224,43 @@ def search(
     return search_hashed(queries, qh, buckets, forward, cfg, opts, row_bounds)
 
 
+def search_hashed(
+    queries: DataFrame,
+    query_hashes: DataFrame,
+    buckets: DataFrame,
+    forward: DataFrame,
+    cfg: LSHConfig,
+    opts: SearchOptions,
+    row_bounds: tuple[int, int] | None = None,
+) -> SearchResult:
+    """The many-query O8-O13 body: bucket join for hashed queries
+    (query_id, index, table_id, hash), scoring against `queries`' vectors,
+    threshold and a per-query window top-K (`rank`). `row_bounds` is a
+    literal row_index range applied to the bucket scan (partition
+    pruning)."""
+    if row_bounds is not None:
+        buckets = buckets.filter(F.col("row_index").between(*row_bounds))
+    cands = candidate_join(query_hashes, buckets, cfg, opts)
+    scored = score_candidates(cands, queries, forward, cfg)
+    rank = F.row_number().over(Window.partitionBy("query_id").orderBy(*_rank_order()))
+    scores = (
+        scored.filter(_passed_col(opts))
+        .withColumn("rank", rank)
+        .filter(F.col("rank") <= opts.num_to_return)
+    )
+    return SearchResult(scores=scores, candidates=scored)
+
+
+def _json_lit(value, ddl: str) -> Column:
+    """`value` as a literal Column parsed from one JSON string: a constant
+    number of py4j calls whatever its length (F.lit of a list costs calls
+    per element). Doubles round-trip exactly, NaN and +/-Infinity included
+    (from_json allows non-numeric numbers by default), and the optimizer
+    folds the parse into a constant."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
+
+
 def search_vector(
-    spark: SparkSession,
     vector,
     index: int,
     buckets: DataFrame,
@@ -242,15 +270,16 @@ def search_vector(
     opts: SearchOptions | None = None,
     num_scored: Observation | None = None,
 ) -> SearchResult:
-    """O14 for one query vector (query_id 0) as a single Python-free plan.
+    """O14 for one query vector (query_id 0) as a Python-free point query.
 
     The driver already holds the vector and the planes, so it hashes the
-    query with the UDF's own kernel (hyperplanes.hash16_tables) and ships
-    the T (2T for ANY) hashes and the vector as literal local relations; the
-    row range comes from `index` directly. A one-row Arrow UDF would be
-    almost all worker round-trip, and the min/max pass would be a job of its
-    own. `num_scored`, if given, observes the scored-candidate count in the
-    same action that collects the scores.
+    query with the UDF's own kernel (hyperplanes.hash16_tables); the
+    per-branch hash arrays, the vector and `index` enter the plan as
+    literals, so the lag bounds fold to literals too. Bucket rows are
+    picked by a filter on the bucket scan, and `scores` is the top-K in
+    rank order (ORDER BY .. LIMIT), with no `rank` column. `num_scored`, if
+    given, observes the scored-candidate count in the same action that
+    collects the scores.
     """
     opts = (opts or SearchOptions()).validate()
     index = int(index)
@@ -261,62 +290,24 @@ def search_vector(
     if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_NEG):
         signs.append(-vec)
     hashes = planes.hash_tables(np.stack(signs), normalize=cfg.normalize)
-    # same (table_id, hash) from both branches would double-count candidates
-    distinct = sorted({(t, int(h)) for row in hashes for t, h in enumerate(row)})
-    qh = _local_relation(
-        spark,
-        [(0, index, t, h) for t, h in distinct],
-        "query_id long, index long, table_id int, hash int",
+    table_pos = F.col("table_id") + 1
+    # one bucket row matching both branches is still one candidate
+    hit = reduce(
+        operator.or_,
+        (F.col("hash") == F.element_at(_json_lit(h.tolist(), "array<int>"), table_pos) for h in hashes),
     )
-    queries = _local_relation(
-        spark, [(0, index, vec.tolist())], "query_id long, index long, vector array<double>"
+    raw, cvec, qvec, score = _score_cols(cfg)
+    scored = (
+        buckets.withColumn("query_index", F.lit(index).cast("long"))
+        .filter(_lag_pred(opts, cfg) & hit)
+        .select("uid", "index")
+        .distinct()
+        .join(forward, "uid", "inner")
+        .select("uid", "index", raw, _json_lit(vec.tolist(), "array<double>").alias("vector"))
+        .select("uid", "index", cvec, qvec)
+        .select(F.lit(0).cast("long").alias("query_id"), "uid", "index", score)
     )
-    row_bounds = None
-    if opts.max_lag > ALL_LAGS:
-        row_bounds = lag_row_bounds(index, index, opts.max_lag, cfg.row_size)
-    return search_hashed(queries, qh, buckets, forward, cfg, opts, row_bounds, num_scored)
-
-
-def _local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """Rows as a SQL VALUES table: a LocalRelation with exact size
-    statistics, so joins broadcast it without running a job to collect it
-    (createDataFrame would make an RDD scan). Values travel as named
-    parameters; positional `?` markers inside VALUES bind out of order on
-    Spark 4.1."""
-    names, types = zip(*(c.split() for c in schema.split(",")))
-    width = len(names)
-    tuples = ", ".join(
-        "(" + ", ".join(f":p{i * width + j}" for j in range(width)) + ")"
-        for i in range(len(rows))
-    )
-    values = spark.sql(
-        f"SELECT * FROM VALUES {tuples} AS t({', '.join(names)})",
-        args={f"p{k}": v for k, v in enumerate(v for r in rows for v in r)},
-    )
-    return values.select([F.col(n).cast(t) for n, t in zip(names, types)])
-
-
-def search_hashed(
-    queries: DataFrame,
-    query_hashes: DataFrame,
-    buckets: DataFrame,
-    forward: DataFrame,
-    cfg: LSHConfig,
-    opts: SearchOptions,
-    row_bounds: tuple[int, int] | None = None,
-    num_scored: Observation | None = None,
-) -> SearchResult:
-    """The shared O8-O13 body: bucket lookup for hashed queries
-    (query_id, index, table_id, hash), scoring against `queries`' vectors,
-    threshold and top-K. `row_bounds` is a literal row_index range applied
-    to the bucket scan (partition pruning); `num_scored` observes the
-    scored-candidate count (NumScored) on whatever action runs the scores.
-    """
-    if row_bounds is not None:
-        buckets = buckets.filter(F.col("row_index").between(*row_bounds))
-    cands = candidate_join(query_hashes, buckets, cfg, opts)
-    scored = score_candidates(cands, queries, forward, cfg)
     if num_scored is not None:
         scored = scored.observe(num_scored, F.count(F.lit(1)).alias("num_scored"))
-    passed = threshold_filter(scored, opts)
-    return SearchResult(scores=top_k(passed, opts.num_to_return), candidates=scored)
+    scores = scored.filter(_passed_col(opts)).orderBy(*_rank_order()).limit(opts.num_to_return)
+    return SearchResult(scores=scores, candidates=scored)

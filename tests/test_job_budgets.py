@@ -8,9 +8,12 @@ len(statusTracker().getJobIdsForGroup(group)). A change that lowers a count
 lowers its pin; raising a pin needs a stated reason.
 """
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from go_lsh_spark.config import DedupConfig
+from go_lsh_spark.config import DedupConfig, LSHConfig, SearchOptions
+from go_lsh_spark.engine import SparkLSH
 from go_lsh_spark.operators.dedup import dedup_pipeline
 from go_lsh_spark.sources.synth import clips_to_spark, synth_clips
 
@@ -48,3 +51,61 @@ def test_batch_dedup_job_budget(spark):
     fingerprint, jobs = _jobs_in_group(spark, "budget-batch-dedup", op)
     assert fingerprint == [120, 24, -8328172168237711242]
     assert jobs <= 18, jobs
+
+
+LSH_CFG = LSHConfig(num_hyperplanes=4, num_tables=16, vector_length=8, seed=99)
+LSH_OPTS = SearchOptions(num_to_return=5, threshold=0.3)
+
+
+@pytest.fixture(scope="module")
+def lsh_index(spark):
+    """SparkLSH.index on 48 random documents over three row partitions,
+    both cached tables materialized by a count (as perfbench's index layer
+    does): (engine, vectors, jobs)."""
+    vecs = np.random.default_rng(5).normal(size=(48, 8))
+    docs = spark.createDataFrame(
+        [(i, (i % 3) * 7200, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "uid long, index long, vector array<double>",
+    )
+
+    def op():
+        eng = SparkLSH(spark, LSH_CFG).index(docs)
+        return eng, eng.buckets.count(), eng.forward.count()
+
+    (eng, n_buckets, n_forward), jobs = _jobs_in_group(spark, "budget-lsh-index", op)
+    assert (n_buckets, n_forward) == (48 * 16, 48)
+    return eng, vecs, jobs
+
+
+def test_lsh_index_job_budget(lsh_index):
+    """index plus the two materializing counts: 7 jobs."""
+    assert lsh_index[2] <= 7, lsh_index[2]
+
+
+def test_lsh_search_job_budget(spark, lsh_index):
+    """One warm SparkLSH.search is one action of 3 jobs: the AQE query
+    stages of the filtered bucket scan (with its distinct) and of the
+    forward index below the uid join, then the TakeOrderedAndProject
+    result stage. The VALUES-relation plan it replaced ran 6."""
+    eng, vecs, _ = lsh_index
+    for i in range(2):
+        (scores, num_scored), jobs = _jobs_in_group(
+            spark, f"budget-lsh-search-{i}", lambda: eng.search(vecs[0], 7200, LSH_OPTS)
+        )
+        assert (len(scores), num_scored) == (5, 15)
+    assert jobs <= 3, jobs
+
+
+def test_lsh_search_df_job_budget(spark, lsh_index):
+    """search_df over 4 queries plus the scores collect: 9 jobs, of which
+    one is the eager min/max(index) pass over the queries."""
+    eng, vecs, _ = lsh_index
+    queries = spark.createDataFrame(
+        [(k, 7200 * (k % 2), [float(x) for x in vecs[k]]) for k in range(4)],
+        "query_id long, index long, vector array<double>",
+    )
+    rows, jobs = _jobs_in_group(
+        spark, "budget-lsh-search-df", lambda: eng.search_df(queries, LSH_OPTS).scores.collect()
+    )
+    assert len(rows) == 20
+    assert jobs <= 9, jobs

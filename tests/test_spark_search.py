@@ -249,6 +249,56 @@ def test_hash_udf_bit_equal_to_planeset(spark):
         np.testing.assert_array_equal(got, planes.hash_tables(vecs, normalize=normalize))
 
 
+DEGENERATE_QUERIES = ([np.nan, 0.0, 0.1], [np.inf, 0.0, 0.1], [-np.inf, 0.0, 0.1])
+
+
+@pytest.mark.parametrize("q", DEGENERATE_QUERIES, ids=["nan", "+inf", "-inf"])
+def test_nan_inf_query_matches_oracle(spark, q):
+    """A NaN or +/-inf query component makes every Pearson score NaN, which
+    fails any threshold (results/results.go:35-40): no hits, while every
+    candidate still counts in NumScored -- on both search paths."""
+    eng = make_engine(spark, BASIC_DOCS)
+    oracle = OracleLSH(LSHConfig())
+    for u, i, v in BASIC_DOCS:
+        oracle.index(u, i, v)
+    for sign in (SIGN_FILTER_POS, SIGN_FILTER_NEG, SIGN_FILTER_ANY):
+        so = SearchOptions(num_to_return=3, sign_filter=sign)
+        exp, exp_scored = oracle.search(q, 0, so)
+        got, got_scored = eng.search(q, 0, so)
+        assert (got, got_scored) == ([(s.uid, s.index, s.score) for s in exp], exp_scored)
+        res = eng.search_df(
+            spark.createDataFrame([(0, 0, q)], "query_id long, index long, vector array<double>"), so
+        )
+        assert res.scores.collect() == []
+        assert res.num_scored() == {0: exp_scored}
+    assert exp_scored == 4
+
+
+def test_search_trees_key_on_whole_options(spark):
+    """The memoized search trees are keyed on the whole frozen
+    SearchOptions: equal options reuse their tree, and options that differ
+    in threshold or sign_filter get different trees and different rows."""
+    from go_lsh_spark.operators.search import _passed_col
+
+    eng = make_engine(spark, BASIC_DOCS)
+    base = SearchOptions(num_to_return=5, sign_filter=SIGN_FILTER_POS)
+    strict = SearchOptions(num_to_return=5, sign_filter=SIGN_FILTER_POS, threshold=1.0)
+    neg = SearchOptions(num_to_return=5, sign_filter=SIGN_FILTER_NEG)
+    assert _passed_col(base) is _passed_col(SearchOptions(num_to_return=5, sign_filter=SIGN_FILTER_POS))
+    assert _passed_col(strict) is not _passed_col(base)
+    assert _passed_col(neg) is not _passed_col(base)
+    with pytest.raises(AttributeError):
+        base.threshold = 0.5
+    assert SearchOptions(max_lag=-5).validate() == SearchOptions(max_lag=ALL_LAGS)
+
+    def hits(so):
+        return uids(eng.search([0, 0, 0.1], 0, so)[0])
+
+    assert hits(base) == [0, 1, 2, 3]
+    assert hits(strict) == [0]
+    assert hits(neg) == [4]
+
+
 def test_num_scored_counts_all_candidates(spark):
     eng = make_engine(spark, BASIC_DOCS)
     _, num_scored = eng.search(

@@ -1,6 +1,7 @@
 """Streaming ingest, CLI entry, and physical-plan assertions."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,6 +69,25 @@ def test_cli_stream_dedup_and_reconcile(spark, tmp_path, capsys):
         "over_cap_fps", "suspect_pairs", "dropped_pairs", "reclustered_clusters"
     }
     assert spark.read.parquet(str(tmp_path / "out" / "clusters")).count() == 16
+
+
+def test_cli_search_golden(spark, tmp_path, capsys):
+    """`python -m go_lsh_spark.cli search` over the reference's TestLSHSearch
+    fixture (lsh/lsh_test.go:29-50): POS top-3 is uids 0, 1, 2 and NEG
+    finds uid 4 alone."""
+    from go_lsh_spark import cli
+
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(0, 0, [0.0, 0.0, 5.0]), (1, 0, [0.0, 0.1, 3.0]), (2, 0, [0.0, 0.1, 2.0]),
+         (3, 0, [0.0, 0.1, 1.0]), (4, 0, [0.0, -0.1, -4.0])],
+        "uid long, index long, vector array<double>",
+    ).write.parquet(docs)
+    for sign, want in (("1", [0, 1, 2]), ("-1", [4])):
+        assert cli.main(["search", "--docs", docs, "--vector", "0,0,0.1", "--k", "3", "--sign", sign]) == 0
+        out = json.loads(capsys.readouterr().out)
+        assert [s[0] for s in out["scores"]] == want, sign
+        assert out["num_scored"] >= len(want)
 
 
 def test_cli_stats_and_synth(tmp_path, capsys):
@@ -151,8 +171,9 @@ def test_multi_query_search_prunes_bucket_partitions(spark, tmp_path):
 def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
     """SparkLSH.search's plan (operators.search.search_vector) over
     partitioned stored buckets: the literal row range computed from the
-    query index reaches the scan as PartitionFilters, and the query is
-    hashed on the driver -- no Arrow UDF in the plan."""
+    query index reaches the scan as PartitionFilters, the query is hashed
+    on the driver -- no Arrow UDF in the plan -- and the plan is a point
+    query with an ORDER BY .. LIMIT top-K."""
     from go_lsh_spark.config import LSHConfig, SearchOptions
     from go_lsh_spark.engine import SparkLSH
     from go_lsh_spark.operators import search as S
@@ -167,7 +188,7 @@ def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
     stored = spark.read.parquet(path)
 
     res = S.search_vector(
-        spark, [2.0, 1.0, -1.0], 7200, stored, eng.forward, eng.cfg, eng.planes,
+        [2.0, 1.0, -1.0], 7200, stored, eng.forward, eng.cfg, eng.planes,
         SearchOptions(max_lag=900, threshold=0.0),
     )
     plan = explain_str(res.scores, "formatted")
@@ -177,6 +198,17 @@ def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
     assert "row_index" in pruning and "7200" in pruning, pruning
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
+    # a point query: the hashes and the vector are literals, so the one join
+    # is the forward-index lookup on uid -- no query relation, no broadcast
+    # of it, and top-K is ORDER BY .. LIMIT, not a window and its exchange
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "LocalTableScan" not in plan
+    joins = re.findall(r"^\(\d+\) (\w*Join)", plan, re.M)
+    assert len(joins) == 1, joins
+    join_keys = plan.split(f") {joins[0]}")[-1].split("Join condition")[0]
+    assert "Left keys [1]: [uid" in join_keys, join_keys
     assert {r["index"] for r in res.scores.collect()} <= {7200}
 
 
