@@ -1,13 +1,21 @@
 """High-level facade wiring the index/search operators together.
 
 SparkLSH is the DataFrame analogue of the reference's LSH struct
-(/root/reference/lsh/lsh.go:28-32): config + plane set + two tables
+(lsh/lsh.go:28-32 of the reference): config + plane set + two tables
 (buckets, forward index) instead of in-memory maps. index / delete /
 search_df build lazy DataFrames (search_df runs one small min/max collect
 over the queries when max_lag >= 0); search, exists, size, uids and stats
-run Spark actions and return driver-side values. search is a point query
-on literals (operators.search.search_vector): one action returns the
-top-K in rank order and the observed NumScored.
+run Spark actions and return driver-side values.
+
+search reads a third table, the search table
+(operators.index.build_search_table): one row per indexed (uid, index)
+with its bucket keys, TFunc'd window and Pearson terms, derived from
+buckets and forward. It is a cache, not a second index: index(cache=True)
+fills it with buckets and forward in one action (a local checkpoint, so
+AQE sizes its partitions); delete() and any assignment to buckets or
+forward drop it, and the next search rebuilds it. A search is then a point
+query on literals (operators.search.search_vector): one Spark job with no
+shuffle returns the top-K in rank order and the observed NumScored.
 """
 
 from __future__ import annotations
@@ -27,9 +35,44 @@ class SparkLSH:
         self.spark = spark
         self.cfg = cfg or LSHConfig()
         self.planes = PlaneSet(self.cfg)
-        self.buckets: DataFrame | None = None
-        self.forward: DataFrame | None = None
+        self._buckets: DataFrame | None = None
+        self._forward: DataFrame | None = None
+        self._table: DataFrame | None = None
+        self._cache = True
         self.rejects: DataFrame | None = None
+
+    # buckets and forward are the index; the search table is derived from
+    # them, so assigning either (index, delete, a Warehouse read) drops it
+    @property
+    def buckets(self) -> DataFrame | None:
+        return self._buckets
+
+    @buckets.setter
+    def buckets(self, df: DataFrame | None) -> None:
+        self._buckets, self._table = df, None
+
+    @property
+    def forward(self) -> DataFrame | None:
+        return self._forward
+
+    @forward.setter
+    def forward(self, df: DataFrame | None) -> None:
+        self._forward, self._table = df, None
+
+    def search_table(self) -> DataFrame | None:
+        """The search table (operators.index.build_search_table) of the
+        current buckets and forward, built on first use after either
+        changes; None before anything is indexed.
+
+        Under index(cache=True) it is materialized as a local checkpoint,
+        not cached: a cached plan keeps the partition count of its last
+        shuffle, while a checkpoint runs with every AQE rule, so a small
+        table coalesces to one partition and a search runs one task. Spark
+        frees the checkpoint's blocks once the table is dropped."""
+        if self._table is None and self._buckets is not None and self._forward is not None:
+            table = I.build_search_table(self._buckets, self._forward, self.cfg)
+            self._table = table.localCheckpoint() if self._cache else table
+        return self._table
 
     def index(self, docs: DataFrame, merge_series: bool = True, cache: bool = True) -> "SparkLSH":
         """Ingest (uid, index, vector) documents: O5.
@@ -40,14 +83,20 @@ class SparkLSH:
         merge shuffle entirely. (r1 ran an eager groupBy-count job here to
         auto-detect; a full driver-side pass per index() call was a serial
         scaling cost, so detection is now the caller's choice.)
+
+        cache=True caches buckets and forward and materializes the search
+        table from them in one action, which fills all three: each document
+        is hashed once. cache=False leaves all three lazy.
         """
         valid, rejects = I.validate_documents(docs, self.cfg)
         buckets = I.build_buckets(valid, self.cfg, self.planes)
         forward = I.build_forward_index(valid, self.cfg, merge=merge_series)
+        self._cache = cache
         if cache:
-            buckets = buckets.cache()
-            forward = forward.cache()
+            buckets, forward = buckets.cache(), forward.cache()
         self.buckets, self.forward, self.rejects = buckets, forward, rejects
+        if cache:
+            self.search_table()  # materializes the table, filling all three
         return self
 
     def delete(self, uids: list[int]) -> "SparkLSH":
@@ -66,9 +115,10 @@ class SparkLSH:
         Validates query length driver-side before launching any job,
         mirroring ErrInvalidDocument (lsh/lsh.go:107-110). The query is
         hashed on the driver and enters the plan as literals
-        (operators.search.search_vector), so the whole search is one Spark
-        action: it collects the <= K rows already in rank order, and an
-        Observation on the scored candidates yields NumScored."""
+        (operators.search.search_vector) over the search table, so the
+        whole search is one Spark job: it collects the <= K rows already in
+        rank order, and an Observation on the scored candidates yields
+        NumScored."""
         if len(vector) != self.cfg.vector_length:
             from go_lsh_spark.oracle import InvalidDocument
 
@@ -76,12 +126,11 @@ class SparkLSH:
                 "vector length does not match with the configured options"
             )
         opts = (opts or SearchOptions()).validate()
-        if self.buckets is None:
+        table = self.search_table()
+        if table is None:
             return [], 0  # nothing indexed: OracleLSH / empty reference tables
         num_scored = Observation()
-        res = S.search_vector(
-            vector, index, self.buckets, self.forward, self.cfg, self.planes, opts, num_scored
-        )
+        res = S.search_vector(vector, index, table, self.cfg, self.planes, opts, num_scored)
         rows = res.scores.collect()
         return (
             [(r["uid"], r["index"], r["score"]) for r in rows],

@@ -21,6 +21,7 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import numpy as np
@@ -93,6 +94,26 @@ def pearson_var(vec: Column | str) -> Column:
     return ss - s * s / n
 
 
+def pearson_terms(vec, normalize: bool) -> tuple[list[float], float, float]:
+    """Driver-side (TFunc(vec), pearson_sum, pearson_var) of one vector,
+    bit-identical to l2_normalize / pearson_sum / pearson_var evaluated by
+    Spark: the same IEEE ops as plain left folds in array order, as
+    `aggregate` runs them (numpy's pairwise `sum` rounds differently)."""
+    xs = [float(x) for x in vec]
+    if normalize:
+        ss = 0.0
+        for x in xs:
+            ss = ss + x * x
+        norm = math.sqrt(ss)
+        if norm != 0.0:  # l2_normalize passes a zero vector through
+            xs = [x / norm for x in xs]
+    s = ss = 0.0
+    for x in xs:
+        s = s + x
+        ss = ss + x * x
+    return xs, s, ss - s * s / float(len(xs))
+
+
 def pearson_with_stats(
     x: Column | str,
     y: Column | str,
@@ -122,12 +143,17 @@ def pearson_with_stats(
     # Spark orders NaN above every number, so NaN would pass both
     # `denom > 0` and the +1 snap below
     raw = F.when(denom > 0.0, F.nanvl(cov / denom, F.lit(None).cast("double")))
-    # snap to exact +/-1 so threshold=1.0 keeps exact matches (see module doc)
-    return (
-        F.when(raw > F.lit(1.0 - SNAP_EPS), F.lit(1.0))
-        .when(raw < F.lit(-1.0 + SNAP_EPS), F.lit(-1.0))
-        .otherwise(raw)
+    # snap to exact +/-1 so threshold=1.0 keeps exact matches (see module
+    # doc). The snap binds the quotient to a lambda variable, so the plan
+    # holds (and every row evaluates) the quotient tree once; a `when` chain
+    # over `raw` itself would copy it into each of its three branches.
+    snapped = F.transform(
+        F.array(raw),
+        lambda r: F.when(r > F.lit(1.0 - SNAP_EPS), F.lit(1.0))
+        .when(r < F.lit(-1.0 + SNAP_EPS), F.lit(-1.0))
+        .otherwise(r),
     )
+    return snapped[0]
 
 
 def cosine(x: Column | str, y: Column | str) -> Column:

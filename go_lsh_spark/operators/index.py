@@ -9,7 +9,9 @@ Spark shape: the per-table loop becomes a *data* dimension (posexplode of the
 per-table hash array); Go error returns become a rejects side-output; bitmap
 mutation becomes an append-only `buckets` table partitioned by `row_index`
 (the partition-pruning analogue of the reference's row-bucket enumeration,
-tables/tables.go:113-122) and clustered by `hash`.
+tables/tables.go:113-122) and clustered by `hash`. The search table
+(build_search_table) is derived from buckets + forward for single-query
+search: one row per (uid, index) with everything a search reads about it.
 
 Scale notes (100TB): one pandas-UDF projection + one explode => narrow
 pipeline, no shuffle until the optional repartition-for-write; bucket rows
@@ -19,6 +21,8 @@ this unbanded form exists for reference parity.
 """
 
 from __future__ import annotations
+
+from functools import cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,6 +71,11 @@ def build_buckets(
     (tables/tables.go:72), then posexplode turns the table loop
     (lsh/lsh.go:83-90) into rows. row_index = index/RowSize*RowSize
     (tables/tables.go:77).
+
+    The explode is the _outer form: a validated document always hashes to
+    T values, so both forms give the same rows, but for plain posexplode
+    the optimizer infers a `size(_hashes) > 0` filter and pushes it below
+    the projection, which evaluates the hash UDF a second time.
     """
     hash_udf = V.make_hash_tables_udf(planes, normalize=cfg.normalize)
     return (
@@ -74,7 +83,7 @@ def build_buckets(
         .select(
             F.col(uid).alias("uid"),
             F.col(index).cast("long").alias("index"),
-            F.posexplode("_hashes").alias("table_id", "hash"),
+            F.posexplode_outer("_hashes").alias("table_id", "hash"),
         )
         .withColumn("row_index", V.row_index("index", cfg.row_size))
         .select("table_id", "row_index", "hash", "uid", "index")
@@ -144,6 +153,58 @@ def build_forward_index(
     )
     return src.groupBy("uid").applyInPandas(
         splice, schema="uid long, series_index long, series array<double>"
+    )
+
+
+@cache
+def window_cols(cfg: LSHConfig) -> tuple[Column, Column]:
+    """(_cvec_raw, _cvec): the zero-padded window of the forward index's
+    `series` at a document's `index` (forwardindex/inmemory.go:61-82) and
+    its TFunc transform (configs/lshconfigs.go:26-29)."""
+    raw = V.window_at(
+        "series", "series_index", F.col("index"), cfg.sample_period, cfg.vector_length
+    ).alias("_cvec_raw")
+    tfunc = V.l2_normalize if cfg.normalize else F.col
+    return raw, tfunc("_cvec_raw").alias("_cvec")
+
+
+def bucket_key(table_id, hash_) -> Column | int:
+    """One bucket as a single long: table_id << 16 | hash (a Hash16 value
+    fits 16 bits, configs/lshconfigs.go:10-13). Columns give a Column,
+    ints an int."""
+    if isinstance(table_id, int):
+        return table_id << 16 | int(hash_)
+    return F.shiftleft(table_id.cast("long"), 16).bitwiseOR(hash_)
+
+
+def build_search_table(buckets: DataFrame, forward: DataFrame, cfg: LSHConfig) -> DataFrame:
+    """buckets + forward -> search table(uid, index, row_index, keys, cvec,
+    cvec_sum, cvec_var): everything a single-query search reads about a
+    candidate, one row per distinct (uid, index) of `buckets` (per forward
+    row of its uid if `forward` holds several).
+
+    `keys` is the set of the bucket_key of every bucket the (uid, index)
+    sits in -- for several documents at one (uid, index), the union of
+    their buckets, as the reference's bitmaps hold them. `cvec` is the
+    TFunc'd forward-index window at `index`, and `cvec_sum` / `cvec_var`
+    its pearson_sum / pearson_var terms. A derived table: rebuild it
+    whenever `buckets` or `forward` change. The inner join to `forward` is
+    the reference's nil-vector skip (lsh/lsh.go:215-217)."""
+    raw, cvec = window_cols(cfg)
+    keys = bucket_key(F.col("table_id"), F.col("hash"))
+    head = ("uid", "index", "row_index", "keys")
+    return (
+        buckets.groupBy("uid", "index", "row_index")
+        .agg(F.collect_set(keys).alias("keys"))
+        .join(forward, "uid", "inner")
+        .select(*head, raw)
+        .select(*head, cvec)
+        .select(
+            *head,
+            F.col("_cvec").alias("cvec"),
+            V.pearson_sum("_cvec").alias("cvec_sum"),
+            V.pearson_var("_cvec").alias("cvec_var"),
+        )
     )
 
 

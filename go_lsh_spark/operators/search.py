@@ -10,24 +10,30 @@ by descending |score| (results/results.go:43-69).
 Two plan shapes:
   * search (SparkLSH.search_df, many queries): the Arrow hash UDF explodes
     each query into (table_id, hash) rows; ONE shuffle equi-join on
-    (table_id, hash) is the goroutine-per-table fan-out
-    (lsh/lsh.go:188-205); the query vectors join back as a broadcast on
-    query_id; top-K is a per-query window row_number.
-  * search_vector (SparkLSH.search, one query): a point query. The driver
-    hashes the query (hyperplanes.hash16_tables), and the hashes and the
-    vector enter the plan as JSON literals -- a constant number of py4j
-    calls whatever num_tables and vector_length. A filter
-    `hash = element_at(hashes, table_id + 1)` on the bucket scan replaces
-    the join, and top-K is ORDER BY .. LIMIT (TakeOrderedAndProject): no
-    query relation, no window, no Python.
+    (table_id, hash) with the buckets is the goroutine-per-table fan-out
+    (lsh/lsh.go:188-205); the distinct (uid, index) candidates join the
+    forward index on uid, the query vectors join back as a broadcast on
+    query_id, and top-K is a per-query window row_number.
+  * search_vector (SparkLSH.search, one query): a point query on the
+    search table (operators.index.build_search_table), which holds per
+    indexed (uid, index) its bucket keys, TFunc'd window and Pearson terms.
+    The driver hashes the query (hyperplanes.hash16_tables) into bucket
+    keys and computes its TFunc and Pearson terms
+    (functions.vector.pearson_terms); they enter the plan as literals -- a
+    constant number of py4j calls whatever num_tables and vector_length.
+    One filter `lag range AND arrays_overlap(keys, query keys)` picks the
+    candidates, each scored from its stored terms, and top-K is ORDER BY ..
+    LIMIT (TakeOrderedAndProject): one stage, no join, no shuffle, no
+    Python.
 
 Shared: lag row enumeration => `row_index BETWEEN` range predicate, which
-prunes bucket partitions when buckets is partitioned by row_index;
-mutex-merged candidate union => distinct (uid, index); negation trick
-(lsh/lsh.go:163-166) => a second hash of -v. The window-slice, normalize,
-Pearson, threshold and rank-order trees are functools.cache builders keyed
-on the whole frozen LSHConfig / SearchOptions (as in operators/dedup.py),
-so a plan costs py4j calls per query, not per expression node.
+prunes partitions when buckets or the search table are partitioned by
+row_index; the mutex-merged candidate union => distinct (uid, index) (one
+search-table row per (uid, index)); negation trick (lsh/lsh.go:163-166) =>
+a second hash of -v. The window-slice, normalize, Pearson, filter,
+threshold and rank-order trees are functools.cache builders keyed on the
+whole frozen LSHConfig / SearchOptions (as in operators/dedup.py), so a
+plan costs py4j calls per query, not per expression node.
 
 Scale notes: the bucket join shuffles on (table_id, hash) -- hot hashes are
 handled by AQE skew-join (enabled in session.py). Python in the plans: only
@@ -37,7 +43,6 @@ search's hash-UDF projections (Arrow-batched, not per-row).
 from __future__ import annotations
 
 import json
-import operator
 from dataclasses import dataclass
 from functools import cache, reduce
 
@@ -56,7 +61,7 @@ from go_lsh_spark.config import (
 )
 from go_lsh_spark.functions import vector as V
 from go_lsh_spark.hyperplanes import PlaneSet
-from go_lsh_spark.operators.index import lag_bounds
+from go_lsh_spark.operators.index import bucket_key, lag_bounds, window_cols
 from go_lsh_spark.oracle import go_div
 
 
@@ -79,12 +84,10 @@ def _score_cols(cfg: LSHConfig) -> tuple[Column, Column, Column, Column]:
     forward-index window at its index (forwardindex/inmemory.go:61-82), the
     TFunc-transformed candidate and query (`vector`) vectors, and their
     Pearson score (lsh/lsh.go:212-224)."""
-    raw = V.window_at(
-        "series", "series_index", F.col("index"), cfg.sample_period, cfg.vector_length
-    ).alias("_cvec_raw")
+    raw, cvec = window_cols(cfg)
     tfunc = V.l2_normalize if cfg.normalize else F.col
     score = V.pearson("_qvec", "_cvec").alias("score")
-    return raw, tfunc("_cvec_raw").alias("_cvec"), tfunc("vector").alias("_qvec"), score
+    return raw, cvec, tfunc("vector").alias("_qvec"), score
 
 
 @cache
@@ -260,29 +263,44 @@ def _json_lit(value, ddl: str) -> Column:
     return F.from_json(F.lit(json.dumps(value)), ddl)
 
 
+@cache
+def _table_filter(opts: SearchOptions, cfg: LSHConfig) -> Column:
+    """A search-table row is a candidate when it lies in the query's lag
+    range and shares a bucket with a hashed query (`_qkeys`)."""
+    return _lag_pred(opts, cfg) & F.arrays_overlap(F.col("keys"), F.col("_qkeys"))
+
+
+@cache
+def _table_scored() -> tuple[Column, ...]:
+    """(query_id, uid, index, score) of a search-table row against the
+    query's TFunc'd vector and Pearson terms (`_qvec`, `_qsum`, `_qvar`)."""
+    score = V.pearson_with_stats("_qvec", "cvec", "_qsum", "cvec_sum", "_qvar", "cvec_var")
+    return F.lit(0).cast("long").alias("query_id"), F.col("uid"), F.col("index"), score.alias("score")
+
+
 def search_vector(
     vector,
     index: int,
-    buckets: DataFrame,
-    forward: DataFrame,
+    table: DataFrame,
     cfg: LSHConfig,
     planes: PlaneSet,
     opts: SearchOptions | None = None,
     num_scored: Observation | None = None,
 ) -> SearchResult:
-    """O14 for one query vector (query_id 0) as a Python-free point query.
+    """O14 for one query vector (query_id 0) against the search table
+    (operators.index.build_search_table) as a Python-free point query.
 
     The driver already holds the vector and the planes, so it hashes the
-    query with the UDF's own kernel (hyperplanes.hash16_tables); the
-    per-branch hash arrays, the vector and `index` enter the plan as
-    literals, so the lag bounds fold to literals too. Bucket rows are
-    picked by a filter on the bucket scan, and `scores` is the top-K in
-    rank order (ORDER BY .. LIMIT), with no `rank` column. `num_scored`, if
-    given, observes the scored-candidate count in the same action that
-    collects the scores.
+    query with the UDF's own kernel (hyperplanes.hash16_tables) into the
+    bucket keys of every requested sign branch, and computes the query's
+    TFunc and Pearson terms (functions.vector.pearson_terms). Those, and
+    `index`, enter the plan as literals, so the lag bounds fold to literals
+    too. One filter on the table scan picks the candidates, and `scores` is
+    the top-K in rank order (ORDER BY .. LIMIT), with no `rank` column: one
+    stage, no shuffle. `num_scored`, if given, observes the scored-candidate
+    count in the same action that collects the scores.
     """
     opts = (opts or SearchOptions()).validate()
-    index = int(index)
     vec = np.asarray(vector, dtype=np.float64)
     signs = []
     if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_POS):
@@ -290,22 +308,20 @@ def search_vector(
     if opts.sign_filter in (SIGN_FILTER_ANY, SIGN_FILTER_NEG):
         signs.append(-vec)
     hashes = planes.hash_tables(np.stack(signs), normalize=cfg.normalize)
-    table_pos = F.col("table_id") + 1
-    # one bucket row matching both branches is still one candidate
-    hit = reduce(
-        operator.or_,
-        (F.col("hash") == F.element_at(_json_lit(h.tolist(), "array<int>"), table_pos) for h in hashes),
-    )
-    raw, cvec, qvec, score = _score_cols(cfg)
+    # a bucket matching both branches is still one candidate
+    keys = sorted({bucket_key(t, h) for branch in hashes for t, h in enumerate(branch)})
+    qvec, qsum, qvar = V.pearson_terms(vec, cfg.normalize)
     scored = (
-        buckets.withColumn("query_index", F.lit(index).cast("long"))
-        .filter(_lag_pred(opts, cfg) & hit)
-        .select("uid", "index")
-        .distinct()
-        .join(forward, "uid", "inner")
-        .select("uid", "index", raw, _json_lit(vec.tolist(), "array<double>").alias("vector"))
-        .select("uid", "index", cvec, qvec)
-        .select(F.lit(0).cast("long").alias("query_id"), "uid", "index", score)
+        table.select(
+            "*",
+            F.lit(int(index)).cast("long").alias("query_index"),
+            _json_lit(keys, "array<bigint>").alias("_qkeys"),
+            _json_lit(qvec, "array<double>").alias("_qvec"),
+            F.lit(qsum).alias("_qsum"),
+            F.lit(qvar).alias("_qvar"),
+        )
+        .filter(_table_filter(opts, cfg))
+        .select(*_table_scored())
     )
     if num_scored is not None:
         scored = scored.observe(num_scored, F.count(F.lit(1)).alias("num_scored"))

@@ -60,8 +60,8 @@ LSH_OPTS = SearchOptions(num_to_return=5, threshold=0.3)
 @pytest.fixture(scope="module")
 def lsh_index(spark):
     """SparkLSH.index on 48 random documents over three row partitions,
-    both cached tables materialized by a count (as perfbench's index layer
-    does): (engine, vectors, jobs)."""
+    then a count of both cached tables (as perfbench's index layer does):
+    (engine, vectors, jobs)."""
     vecs = np.random.default_rng(5).normal(size=(48, 8))
     docs = spark.createDataFrame(
         [(i, (i % 3) * 7200, [float(x) for x in v]) for i, v in enumerate(vecs)],
@@ -78,22 +78,25 @@ def lsh_index(spark):
 
 
 def test_lsh_index_job_budget(lsh_index):
-    """index plus the two materializing counts: 7 jobs."""
-    assert lsh_index[2] <= 7, lsh_index[2]
+    """index plus the two counts: 10 jobs. index() materializes the search
+    table in 6 (the AQE query stages of its keys aggregate and of the
+    forward merge and broadcast, then the local checkpoint), which fills
+    the buckets and forward caches; each count then reads its cache in 2.
+    The search-table fill is what makes a warm search one job."""
+    assert lsh_index[2] <= 10, lsh_index[2]
 
 
 def test_lsh_search_job_budget(spark, lsh_index):
-    """One warm SparkLSH.search is one action of 3 jobs: the AQE query
-    stages of the filtered bucket scan (with its distinct) and of the
-    forward index below the uid join, then the TakeOrderedAndProject
-    result stage. The VALUES-relation plan it replaced ran 6."""
+    """One warm SparkLSH.search is one job: a filter and the Pearson score
+    over the materialized search table, then TakeOrderedAndProject, with
+    no shuffle."""
     eng, vecs, _ = lsh_index
     for i in range(2):
         (scores, num_scored), jobs = _jobs_in_group(
             spark, f"budget-lsh-search-{i}", lambda: eng.search(vecs[0], 7200, LSH_OPTS)
         )
         assert (len(scores), num_scored) == (5, 15)
-    assert jobs <= 3, jobs
+    assert jobs <= 1, jobs
 
 
 def test_lsh_search_df_job_budget(spark, lsh_index):

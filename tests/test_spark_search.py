@@ -106,6 +106,21 @@ def test_search_across_time(spark):
     got = {(u, i, round(s, 2)) for u, i, s in scores}
     assert got == {(0, 60, 1.0), (1, 60, 1.0)}
 
+    # delete() rebuilds the search table: uid 1 is gone from the hits and
+    # from NumScored, as in the oracle after the same delete
+    oracle = OracleLSH(LSHConfig(num_hyperplanes=4, row_size=60))
+    for u, i, v in docs:
+        oracle.index(u, i, v)
+    eng.delete([1])
+    oracle.delete(1)
+    for idx, so in ((0, SearchOptions(max_lag=-1, threshold=1.0)), (60, SearchOptions(max_lag=0))):
+        scores, num_scored = eng.search([1, 3, 3], idx, so)
+        exp, exp_scored = oracle.search([1, 3, 3], idx, so)
+        assert scored_list(scores) == [(s.uid, s.index, round(s.score, 9)) for s in exp]
+        assert num_scored == exp_scored
+        assert 1 not in uids(scores)
+    assert (0, 60) in {(u, i) for u, i, _ in scores}
+
 
 def test_validation_side_output(spark):
     # lsh_test.go:190-211 expressed as rejects routing, not exceptions
@@ -145,6 +160,20 @@ def random_corpus(spark):
             for sign in (1.0, 1.0, -1.0, -1.0):
                 docs.append((uid, idx, sign * vecs[j]))
                 uid += 1
+    # per query index and tie base: a uid whose window there is partly
+    # overwritten by its next window (merge_series splice,
+    # forwardindex/inmemory.go:30-59), and a uid with two different
+    # documents at the index -- one candidate holding the union of both
+    # documents' buckets, scored against the first (the splice skips the
+    # second) and counted once in NumScored
+    period = RANDOM_CFG.get("sample_period", LSHConfig().sample_period)
+    for j in range(TIE_BASES):
+        for idx in QUERY_INDEXES:
+            docs.append((uid, idx, vecs[j] + rng.normal(scale=0.2, size=vlen)))
+            docs.append((uid, idx + 3 * period, vecs[TIE_BASES + j]))
+            docs.append((uid + 1, idx, vecs[j] + rng.normal(scale=0.3, size=vlen)))
+            docs.append((uid + 1, idx, vecs[j] + rng.normal(scale=0.3, size=vlen)))
+            uid += 2
     docs = [(u, i, [float(x) for x in v]) for u, i, v in docs]
 
     eng = make_engine(spark, docs, **RANDOM_CFG)
@@ -172,6 +201,10 @@ def test_engine_matches_oracle_randomized(random_corpus):
         for lag in (ALL_LAGS, 0, 900)
         for idx in QUERY_INDEXES
     ]
+    # the merged-window and duplicate-document uids of random_corpus
+    first = 1000 + TIE_BASES * len(QUERY_INDEXES) * 4
+    merged = set(range(first, first + 2 * TIE_BASES * len(QUERY_INDEXES), 2))
+    seen = set()
     for qi, (sign, lag, idx) in enumerate(combos):
         q = vecs[qi % TIE_BASES] + rng.normal(scale=0.05, size=vlen)
         full, _ = oracle.search(
@@ -186,6 +219,8 @@ def test_engine_matches_oracle_randomized(random_corpus):
         assert scored_list(got) == [(s.uid, s.index, round(s.score, 9)) for s in exp], (
             f"combo {qi} {sign, lag, idx}"
         )
+        seen |= {u for u, _, _ in got if u >= first}
+    assert seen & merged and seen - merged, seen
 
 
 def test_single_search_matches_search_df(random_corpus):
@@ -247,6 +282,39 @@ def test_hash_udf_bit_equal_to_planeset(spark):
         rows = df.select("id", udf(F.col("vector")).alias("h")).orderBy("id").collect()
         got = np.array([r["h"] for r in rows], dtype=np.uint64)
         np.testing.assert_array_equal(got, planes.hash_tables(vecs, normalize=normalize))
+
+
+def test_pearson_terms_bit_equal_to_spark(spark):
+    """The driver's query terms (pearson_terms) and the search table's
+    candidate terms (l2_normalize / pearson_sum / pearson_var in Spark) are
+    the same IEEE ops in the same order: bit-equal on random vectors over
+    six orders of magnitude, a zero vector and NaN / inf components."""
+    from pyspark.sql import functions as F
+
+    from go_lsh_spark.functions import vector as Vf
+
+    rng = np.random.default_rng(9)
+    rand = rng.normal(size=(40, 60)) * rng.uniform(1e-3, 1e3, size=(40, 1))
+    odd = np.zeros((3, 60))
+    odd[1, 3], odd[2, 5] = np.nan, np.inf
+    vecs = np.vstack([rand, odd])
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], "id long, vector array<double>"
+    )
+    for normalize in (True, False):
+        t = Vf.l2_normalize("vector") if normalize else F.col("vector")
+        rows = (
+            df.select("id", t.alias("t"))
+            .select("id", "t", Vf.pearson_sum("t").alias("s"), Vf.pearson_var("t").alias("v"))
+            .orderBy("id")
+            .collect()
+        )
+        def bits(t, s, v):
+            return [x.hex() for x in t], s.hex(), v.hex()
+
+        for r, v in zip(rows, vecs):
+            got = bits(*Vf.pearson_terms(v, normalize))
+            assert got == bits(r["t"], r["s"], r["v"]), (normalize, r["id"])
 
 
 DEGENERATE_QUERIES = ([np.nan, 0.0, 0.1], [np.inf, 0.0, 0.1], [-np.inf, 0.0, 0.1])

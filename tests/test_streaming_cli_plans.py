@@ -169,11 +169,11 @@ def test_multi_query_search_prunes_bucket_partitions(spark, tmp_path):
 
 
 def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
-    """SparkLSH.search's plan (operators.search.search_vector) over
-    partitioned stored buckets: the literal row range computed from the
-    query index reaches the scan as PartitionFilters, the query is hashed
-    on the driver -- no Arrow UDF in the plan -- and the plan is a point
-    query with an ORDER BY .. LIMIT top-K."""
+    """SparkLSH.search's plan (operators.search.search_vector) over a
+    search table stored partitioned by row_index: the literal row range
+    computed from the query index reaches the scan as PartitionFilters, the
+    query is hashed on the driver -- no Arrow UDF in the plan -- and the
+    plan is one scan, filter and ORDER BY .. LIMIT top-K."""
     from go_lsh_spark.config import LSHConfig, SearchOptions
     from go_lsh_spark.engine import SparkLSH
     from go_lsh_spark.operators import search as S
@@ -183,12 +183,12 @@ def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
         "uid long, index long, vector array<double>",
     )
     eng = SparkLSH(spark, LSHConfig(num_tables=4)).index(docs, merge_series=False, cache=False)
-    path = str(tmp_path / "buckets")
-    eng.buckets.write.partitionBy("row_index").parquet(path)
+    path = str(tmp_path / "search_table")
+    eng.search_table().write.partitionBy("row_index").parquet(path)
     stored = spark.read.parquet(path)
 
     res = S.search_vector(
-        [2.0, 1.0, -1.0], 7200, stored, eng.forward, eng.cfg, eng.planes,
+        [2.0, 1.0, -1.0], 7200, stored, eng.cfg, eng.planes,
         SearchOptions(max_lag=900, threshold=0.0),
     )
     plan = explain_str(res.scores, "formatted")
@@ -198,18 +198,32 @@ def test_single_query_search_prunes_partitions_without_python(spark, tmp_path):
     assert "row_index" in pruning and "7200" in pruning, pruning
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
-    # a point query: the hashes and the vector are literals, so the one join
-    # is the forward-index lookup on uid -- no query relation, no broadcast
-    # of it, and top-K is ORDER BY .. LIMIT, not a window and its exchange
+    # a point query: the bucket keys and the query vector are literals and
+    # every candidate-side value is a table column, so there is no join, no
+    # query relation and no shuffle, and top-K is ORDER BY .. LIMIT, not a
+    # window
     assert "TakeOrderedAndProject" in plan
+    assert "Join" not in plan
+    assert "Exchange" not in plan
     assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
     assert "LocalTableScan" not in plan
-    joins = re.findall(r"^\(\d+\) (\w*Join)", plan, re.M)
-    assert len(joins) == 1, joins
-    join_keys = plan.split(f") {joins[0]}")[-1].split("Join condition")[0]
-    assert "Left keys [1]: [uid" in join_keys, join_keys
     assert {r["index"] for r in res.scores.collect()} <= {7200}
+
+
+def test_lsh_buckets_hash_each_document_once(spark):
+    """The bucket plan evaluates the Arrow hash UDF once per document: no
+    filter inferred from the explode may re-run it below the projection."""
+    from go_lsh_spark.config import LSHConfig
+    from go_lsh_spark.engine import SparkLSH
+
+    docs = spark.createDataFrame(
+        [(i, 0, [float(i), 1.0, -1.0]) for i in range(4)],
+        "uid long, index long, vector array<double>",
+    )
+    eng = SparkLSH(spark, LSHConfig(num_tables=4)).index(docs, cache=False)
+    plan = explain_str(eng.buckets, "formatted")
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    assert eng.buckets.count() == 4 * 4
 
 
 def test_candidate_pairs_plan_has_no_window(spark):
